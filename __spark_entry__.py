@@ -1612,8 +1612,8 @@ def _knn_pq(spark, sf):
 
 def _semdedup(spark, sf):
     """SemDeDup-style semantic dedup over the embeddings table:
-    md5-deterministic centroids (oracle-expressible; swap in ivf_train
-    for production), per-cluster cosine pruning, first-occurrence
+    md5-deterministic centroids (oracle-expressible; swap in
+    ivf_train_sampled for production), per-cluster cosine pruning, first-occurrence
     keeps (operators/similarity.py semdedup)."""
     from navigator_document_parser_spark.operators.similarity import (
         semdedup,
@@ -1671,8 +1671,7 @@ def _knn_ivf(spark, sf):
     single SQL statement; recall is pytest-checked vs brute force).
     r4: trains on a bounded md5-ordered driver sample (FAISS-style,
     operators/similarity.py ivf_train_sampled) — 2 Spark jobs total
-    instead of 2 + iterations; distributed Lloyd (ivf_train) remains
-    available and parity-tested."""
+    instead of 2 + iterations."""
     from navigator_document_parser_spark.operators.similarity import (
         ivf_train_sampled,
         knn_ivf,

@@ -39,11 +39,6 @@ ARROW_MAX_RECORDS_PER_BATCH = int(os.getenv("ARROW_MAX_RECORDS_PER_BATCH", "256"
 # Default shuffle partition count for local test sessions (AQE coalesces).
 SHUFFLE_PARTITIONS = int(os.getenv("SPARK_SHUFFLE_PARTITIONS", "32"))
 
-# Target bytes of html per task partition when rebalancing skewed blob sizes.
-SKEW_TARGET_PARTITION_BYTES = int(
-    os.getenv("SKEW_TARGET_PARTITION_BYTES", str(64 * 1024 * 1024))
-)
-
 
 def build_spark(app_name: str = "navigator-parser", master: str | None = None,
                 extra_conf: dict | None = None):

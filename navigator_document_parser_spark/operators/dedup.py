@@ -2409,7 +2409,7 @@ def dedup_phash(
     Input is the decoded grayscale grid (``pixels``: array<int>,
     width x height, row-major) — the real-codec decode/resize that
     produces it is the documented multimodal stub boundary
-    (operators/multimodal.py resize_images); everything from pixels down
+    (operators/multimodal.py _fake_raster); everything from pixels down
     is deterministic integer math, so the whole operator is
     oracle-exact in DuckDB.
 

@@ -1,9 +1,9 @@
 """Link-graph analytics for crawl curation.
 
 Web-scale pipelines weight domains by their position in the host link
-graph (WAT-derived, see sources/warc.host_link_graph): link-based
-scores separate organic sites from spam farms far more cheaply than
-per-page classifiers. This module maps the standard power-iteration
+graph (edges from page outlinks, e.g. operators/tables.extract_links):
+link-based scores separate organic sites from spam farms far more
+cheaply than per-page classifiers. This module maps the standard power-iteration
 PageRank onto DataFrame ops with the same scale discipline as
 dedup.connected_components:
 

@@ -1,47 +1,12 @@
-"""Skew-aware join utilities.
-
-AQE's skew-join splitting handles sort-merge joins it can observe, but a
-hot key against a non-broadcastable dimension still serializes one task.
-``salted_join`` is the explicit fix (north-rule 'skew handled
-explicitly'): salt the skewed fact side into ``salt`` sub-keys and
-replicate the dimension side once per salt — the hot key's rows spread
-over ``salt`` tasks, at the cost of a ``salt``x dimension replication.
-
-Use when: one side has heavy key skew AND the other side is too big to
-broadcast but small enough to replicate `salt` times. Otherwise prefer
-broadcast (tiny dim) or plain AQE (mild skew).
+"""Join shapes Spark has no operator for: a backward as-of join and a
+keyless interval (range) join, each planned as equi-joins so Catalyst
+never falls back to a nested-loop or cartesian join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: list[str],
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with fact-side salting + dim-side replication.
-
-    Result is identical to ``fact.join(dim, on, how)`` for inner/left
-    joins; the physical shuffle keys are (on..., _salt) so a hot join
-    key fans out over ``salt`` partitions.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left joins")
-
-    salted_fact = fact.withColumn(
-        "_salt", F.pmod(F.xxhash64(*on, F.monotonically_increasing_id()), F.lit(salt)).cast("int")
-    )
-    replicated_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
-    out = salted_fact.join(replicated_dim, on + ["_salt"], how)
-    return out.drop("_salt")
 
 
 def asof_join(

@@ -101,14 +101,6 @@ def extract_media_features(
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("width", LongType(), False),
-    StructField("height", LongType(), False),
-    StructField("payload", BinaryType(), False),
-    StructField("content_hash", StringType(), False),
-])
-
 FRAME_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
     StructField("frame_idx", LongType(), False),
@@ -130,34 +122,6 @@ def _fake_raster(payload: bytes, width: int, height: int) -> bytes:
         out.extend(h)
         h = hashlib.md5(h).digest()
     return bytes(out[:need])
-
-
-def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
-    """Image resize stage: kind filter pushed to the scan, one
-    mapInPandas pass, payload replaced by the (fake-decoded) raster.
-    Pure per-row map — shuffle-free at any scale; Arrow batch size
-    bounds worker memory under large images."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, raw in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(raw) if raw is not None else b""
-                raster = _fake_raster(payload, width, height)
-                rows.append({
-                    "media_id": media_id,
-                    "width": width,
-                    "height": height,
-                    "payload": raster,
-                    "content_hash": hashlib.md5(raster).hexdigest(),
-                })
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RESIZED_SCHEMA.fields]
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        run, schema=RESIZED_SCHEMA
-    )
 
 
 def sample_video_frames(media: DataFrame, n_frames: int = 4,

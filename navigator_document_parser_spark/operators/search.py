@@ -85,17 +85,15 @@ def keyword_search(
     # tf feeds both the document-frequency aggregate and the scored
     # join; the barrier stops each branch from re-running
     # scan->explode->agg (lessons 3/7). Post-filter it is tiny:
-    # |vocab| x n_docs rows at most. dfq is count(*) over the unique
-    # (term, doc_id) rows == the old count_distinct, as a map-side-
-    # combinable aggregate + broadcast — NOT a term-partitioned
-    # window, which would serialize a hot term into one task (r7
-    # review).
+    # |vocab| x n_docs rows at most. dfq is count(doc_id) over the
+    # unique (term, doc_id) rows == count(DISTINCT doc_id), NULL not
+    # counted, as a map-side-combinable aggregate + broadcast — NOT a
+    # term-partitioned window, which would serialize a hot term into
+    # one task (r7 review).
     tf = term_postings(
         df, id_col, text_col, vocabulary=sorted(vocab)
     ).localCheckpoint(eager=True)
-    dfreq = tf.groupBy("term").agg(
-        F.count(F.lit(1)).alias("dfq")
-    )
+    dfreq = tf.groupBy("term").agg(F.count("doc_id").alias("dfq"))
     n_docs = df.select(F.count_distinct(F.col(id_col)).alias("n_docs"))
 
     scored = (
@@ -112,8 +110,9 @@ def keyword_search(
         )
         .filter(F.col("n_matched") == F.col("n_terms"))
     )
+    # NULLS LAST: DuckDB's ascending order, which the oracle ranks by
     w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
+        F.col("score").desc(), F.col("doc_id").asc_nulls_last()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
@@ -359,7 +358,12 @@ def bm25_search(
     )
     tf = (
         base.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(sorted(vocab)))
+        # a NULL doc_id row counts toward n_docs and avgdl but is never
+        # scored: the oracle builds tf through a join on doc_id
+        .filter(
+            F.col("term").isin(sorted(vocab))
+            & F.col("doc_id").isNotNull()
+        )
         .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
         # tf feeds the dfreq aggregate AND the scored join; without a
@@ -371,9 +375,9 @@ def bm25_search(
         # and broadcasts back (r7 review).
         .localCheckpoint(eager=True)
     )
-    dfreq = tf.groupBy("term").agg(
-        F.count(F.lit(1)).alias("dfq")
-    )
+    # count(doc_id) over unique (term, doc_id) rows == the oracle's
+    # count(DISTINCT doc_id)
+    dfreq = tf.groupBy("term").agg(F.count("doc_id").alias("dfq"))
     scored = (
         tf.join(F.broadcast(qdf), "term")
         .join(F.broadcast(dfreq), "term")
@@ -385,8 +389,9 @@ def bm25_search(
             ).alias("score")
         )
     )
+    # NULLS LAST: DuckDB's ascending order, which the oracle ranks by
     w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
+        F.col("score").desc(), F.col("doc_id").asc_nulls_last()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))

@@ -283,139 +283,6 @@ def _collect_centroids(centroids: DataFrame) -> list[list[float]]:
     return [list(r["centroid"]) for r in sorted(rows, key=lambda r: r["cid"])]
 
 
-def _seed_centroids(
-    embeddings: DataFrame,
-    n_centroids: int,
-    id_col: str,
-    vec_col: str,
-    oversample: int = 2,
-) -> list[list[float]]:
-    """Deterministic kmeans||-style seeding (no RNG state anywhere).
-
-    Round 1 picks the md5(id)-minimal vector (a uniform pseudo-random
-    draw). Round 2 oversamples: ONE distributed pass scores every vector
-    against the first seed and keeps the ``oversample * n_centroids``
-    least-similar (cosine asc, id asc) — the kmeans|| trick of grabbing
-    many far candidates per pass instead of one-at-a-time k-means++.
-    The candidate pool is then reduced on the driver by exact maximin
-    (farthest-first) to n_centroids seeds. Two Spark jobs total,
-    independent of n_centroids.
-    """
-    e = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    first = (
-        e.orderBy(F.md5(F.col("vid").cast("string")), F.col("vid"))
-        .limit(1)
-        .collect()[0]
-    )
-    seed0 = list(first["v"])
-
-    pool_rows = (
-        e.select(
-            "vid",
-            "v",
-            cosine(F.col("v"), F.array(*[F.lit(x) for x in seed0])).alias("c"),
-        )
-        .orderBy(F.col("c").asc(), F.col("vid").asc())
-        .limit(max(0, oversample * n_centroids - 1))
-        .collect()
-    )
-    pool = [(r["vid"], list(r["v"])) for r in pool_rows]
-
-    # driver-side farthest-first reduction over the tiny candidate pool
-    import math
-
-    def cos(a: list[float], b: list[float]) -> float:
-        num = sum(x * y for x, y in zip(a, b))
-        da = math.sqrt(sum(x * x for x in a))
-        db = math.sqrt(sum(x * x for x in b))
-        return 0.0 if da == 0 or db == 0 else num / (da * db)
-
-    chosen = [seed0]
-    remaining = list(pool)
-    while len(chosen) < n_centroids and remaining:
-        best_idx, best_key = 0, None
-        for i, (vid, v) in enumerate(remaining):
-            nearest = max(cos(v, c) for c in chosen)
-            key = (nearest, vid)  # least similar to its nearest seed wins
-            if best_key is None or key < best_key:
-                best_idx, best_key = i, key
-        chosen.append(remaining.pop(best_idx)[1])
-    while len(chosen) < n_centroids:
-        chosen.append(list(chosen[len(chosen) % max(1, len(chosen))]))
-    return chosen
-
-
-def ivf_train(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tol: float = 1e-7,
-) -> DataFrame:
-    """IVF coarse quantizer: Lloyd's k-means with shuffle-free assignment.
-
-    Per iteration: (1) assignment is a pure projection — one vectorized
-    numpy-matmul Arrow batch per task (see _probe_udf; the old
-    crossJoin + row_number window shuffled N*C scored rows per
-    iteration); (2) update = per-(cid, dim) mean via posexplode +
-    groupBy — map-side partial aggregation reduces every task's output
-    to <= C*dim partial rows before the shuffle, so the update's shuffle
-    volume is O(tasks * C * dim), independent of N; (3) the C*dim means
-    are collected (tiny) to re-literalize centroids and check movement:
-    the loop EARLY-STOPS when no coordinate moved more than ``tol``.
-    Seeding is deterministic kmeans||-style (_seed_centroids).
-    Deterministic given a fixed partitioning; returns (cid,
-    centroid array<double>) with cid in [1, n_centroids].
-    """
-    cents = _seed_centroids(embeddings, n_centroids, id_col, vec_col)
-    e = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-
-    for _ in range(iterations):
-        unit = [_unit(c) for c in cents]
-        nearest = _probe_udf(unit, 1)
-        assigned = e.select(
-            F.element_at(nearest(F.col("v")), 1).alias("cid"), "v"
-        )
-        means = (
-            assigned.select("cid", F.posexplode("v").alias("dim", "x"))
-            .groupBy("cid", "dim")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        new_cents = [list(c) for c in cents]  # empty clusters keep position
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cid.setdefault(r["cid"], {})[r["dim"]] = r["m"]
-        for cid, dims in by_cid.items():
-            new_cents[cid - 1] = [
-                dims[d] for d in range(len(cents[cid - 1]))
-            ]
-        moved = max(
-            (
-                abs(a - b)
-                for old, new in zip(cents, new_cents)
-                for a, b in zip(old, new)
-            ),
-            default=0.0,
-        )
-        cents = new_cents
-        if moved <= tol:
-            break
-
-    spark = embeddings.sparkSession
-    return spark.createDataFrame(
-        [(i + 1, c) for i, c in enumerate(cents)],
-        schema="cid int, centroid array<double>",
-    )
-
-
 def ivf_train_sampled(
     embeddings: DataFrame,
     n_centroids: int = 16,
@@ -433,14 +300,10 @@ def ivf_train_sampled(
     at BLAS speed, where 20 iterations cost milliseconds instead of 20
     driver-round-trip jobs.
 
-    vs ivf_train (distributed Lloyd, kept for exact-parity tests and
-    for the corner where even a sample shouldn't leave the executors):
-    2 jobs total instead of 2 + iterations, and the centroid quality
-    is BETTER because local iterations are free — the classic
-    job-latency-vs-data-motion trade resolved the right way for a
-    coarse quantizer whose training set never needs to exceed ~100k
-    vectors. Seeding: farthest-first from the sample head, same
-    maximin rule as _seed_centroids. Deterministic (md5 order, no RNG
+    2 jobs total, independent of ``iterations``: a coarse quantizer's
+    training set never needs to exceed ~100k vectors, so trading data
+    motion for job latency is the right call. Seeding: farthest-first
+    (maximin) from the sample head. Deterministic (md5 order, no RNG
     state). Returns (cid, centroid array<double>), cid in
     [1, n_centroids].
     """
@@ -611,8 +474,8 @@ def semdedup(
     Centroids here are md5-derived unit vectors (_hyperplane — the
     same determinism trick as the LSH planes), so cluster assignment
     and therefore the WHOLE operator is expressible in the DuckDB
-    oracle; a trained k-means (ivf_train) drops in for production use
-    without touching the shape. Ties in the argmax break toward the
+    oracle; a trained k-means (ivf_train_sampled) drops in for
+    production use without touching the shape. Ties in the argmax break toward the
     smallest cid exactly like _probe_udf's stable argsort.
 
     Scale shape: assignment is a zero-shuffle Arrow matmul projection;
@@ -2104,10 +1967,11 @@ def mmr_rerank(
     greedy path; lam and (1-lam) are injected as the same repr
     literals.
 
-    100 TB shape: candidate generation is the broadcast-query knn scan;
-    everything after operates on n_cands rows per query (pairs =
-    n_cands^2, checkpointed once) — the k unrolled rounds are joins on
-    the TINY candidate tables, never the corpus. Keep k small (it is a
+    100 TB shape: candidate generation is the broadcast-query knn scan
+    (checkpointed once); everything after operates on n_cands rows per
+    query — the n_cands^2 candidate pairs are cogrouped with the
+    candidates by query_id and the k greedy rounds run in ONE Arrow
+    pass per query, never over the corpus. Keep k small (it is a
     rerank, not a sort).
 
     Returns (query_id, vec_id, pick, mmr_score) with pick in 1..k,

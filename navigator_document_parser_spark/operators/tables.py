@@ -488,10 +488,10 @@ def extract_links(
     base_col: str = "url",
 ) -> DataFrame:
     """Outlink extraction from raw markup: every <a href> resolved
-    against the page url — the edge list that host_link_graph gets from
-    WAT files, produced here straight from the input table's html
-    column (BASELINE.json input_hint), so pagerank / anchor_text /
-    crawl frontiers run without a separate WAT ingest.
+    against the page url — the link edge list, produced straight from
+    the input table's html column (BASELINE.json input_hint), so
+    pagerank / anchor_text / crawl frontiers run without a separate
+    WAT ingest.
 
     Resolution covers the four shapes that matter at crawl scale:
     absolute (kept as-is), protocol-relative (inherits the base

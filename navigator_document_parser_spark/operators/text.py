@@ -777,19 +777,6 @@ def pii_scrub(
     )
 
 
-def with_text_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        F.length(c).alias("n_chars_computed"),
-        token_count(c).alias("n_tokens"),
-        punct_count(c).cast("bigint").alias("n_punct"),
-        quality_score(c).alias("quality"),
-        lang_guess(c).alias("lang_guess"),
-        fingerprint(c).alias("fp"),
-    )
-
-
 # ---- DuckDB oracle fragments (kept adjacent so drift is visible) ---------
 
 def oracle_token_count(col: str) -> str:
@@ -2036,37 +2023,6 @@ def fix_mojibake(col: Column) -> Column:
     for bad, good in mojibake_pairs():
         s = F.replace(s, F.lit(bad), F.lit(good))
     return s
-
-
-def encoding_repair(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-document encoding repair + accounting.
-
-    chars_repaired = length(input) - length(fixed): each repaired
-    sequence collapses len(bad)-1 chars, so the delta is the exact
-    total repair mass — ONE extra length() over the already-computed
-    fixed column instead of 13 per-pattern occurrence counts (each of
-    which would re-inline the whole replace chain under
-    CollapseProject — CLAUDE.md lessons 2/9).
-
-    100 TB shape: one map-only codegen projection, ~13 literal
-    replaces per row, zero shuffle, nothing leaves the JVM.
-
-    Returns (doc_id, n_chars, chars_repaired, text_fixed).
-    """
-    s = F.col(text_col)
-    fixed = fix_mojibake(s)
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(s).cast("bigint").alias("n_chars"),
-        (F.length(s) - F.length(fixed)).cast("bigint").alias(
-            "chars_repaired"
-        ),
-        fixed.alias("text_fixed"),
-    )
 
 
 def oracle_fix_mojibake_sql(expr: str) -> str:

@@ -244,9 +244,9 @@ def fetch_schedule(
     100 TB shape: two window functions over (host) and (worker)
     partitions — both shuffle once on narrow keys; the host window is
     skew-safe because a single host's queue is bounded by per-host crawl
-    budgets upstream (cdx_fetch_plan), and the worker window's
-    partition count is n_workers, which is fine because n_workers in
-    production is O(executors), each partition a worker's queue.
+    budgets upstream, and the worker window's partition count is
+    n_workers, which is fine because n_workers in production is
+    O(executors), each partition a worker's queue.
 
     Returns (url, host, worker, host_seq, slot).
     """

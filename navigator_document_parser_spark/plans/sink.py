@@ -52,9 +52,9 @@ class ParquetMergeSink:
             return None
 
     def _has_flat_files(self, spark: SparkSession) -> bool:
-        """True when the table root holds data files directly (the
-        pre-partitioned legacy layout). Hadoop FS API — works for
-        file://, s3a://, hdfs:// alike."""
+        """True when the table root holds data files directly (the flat
+        layout of tables written before the per-merge directories).
+        Hadoop FS API — works for file://, s3a://, hdfs:// alike."""
         jvm = spark._jvm
         hpath = jvm.org.apache.hadoop.fs.Path(self.path)
         fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -70,8 +70,11 @@ class ParquetMergeSink:
         existing = self.read(spark)
         if existing is None:
             return None
-        # column-pruned scan: only the key columns leave the parquet reader
-        return existing.select(*self.keys).dropDuplicates(self.keys)
+        # column-pruned scan: only the key columns leave the parquet reader.
+        # No dropDuplicates: every consumer is a left-anti join (or the
+        # broadcast-size count), and duplicate build rows cannot change
+        # which batch rows an anti-join keeps.
+        return existing.select(*self.keys)
 
     def _maybe_broadcast(self, spark: SparkSession, keys: DataFrame) -> DataFrame:
         """Broadcast the committed key set only while it is small enough.
@@ -177,7 +180,8 @@ class ParquetMergeSink:
         """Insert-if-absent on (url, warc_ts, translated_to).
 
         Returns {'inserted': n, 'partitions': p} counted from the
-        committed files (no re-execution of the upstream plan).
+        committed files (no re-execution of the upstream plan). Raises
+        ValueError, writing nothing, on a table in the flat layout.
 
         ``assume_unique_keys=True`` skips the within-batch dedup. The
         dedup is a full shuffle of the payload bytes — when the input
@@ -185,6 +189,14 @@ class ParquetMergeSink:
         it makes the whole extract->merge pipeline ZERO-shuffle: scan ->
         ArrowEvalPython -> broadcast anti-join -> write.
         """
+        if self._has_flat_files(spark):
+            # a per-merge directory next to flat part files breaks
+            # partition discovery, which would silently disable the
+            # anti-join and re-insert committed rows on the next run
+            raise ValueError(
+                f"{self.path} holds data files at its root (flat layout); "
+                "the sink only appends per-merge partition directories"
+            )
         if assume_unique_keys:
             deduped = batch
         else:
@@ -225,34 +237,17 @@ class ParquetMergeSink:
         )  # sanitized: merge_id becomes a hive partition directory name
         to_write = deduped.withColumn("part_id", F.spark_partition_id())
 
-        if self._has_flat_files(spark):
-            # LEGACY layout (tables written before the per-merge-dir
-            # change): flat part files with merge_id as a DATA column.
-            # Mixing directory depths breaks partition discovery and
-            # would silently disable the anti-join on the next run, so a
-            # legacy table keeps appending flat (and keeps the old
-            # O(history) recount) rather than corrupting itself.
-            to_write.withColumn("merge_id", F.lit(merge_id)).write.mode(
-                "append"
-            ).parquet(self.path)
-            written = spark.read.parquet(self.path).filter(
-                F.col("merge_id") == merge_id
-            )
-        else:
-            # each merge commits into its own hive-style partition dir:
-            # readers of self.path recover merge_id via partition
-            # discovery, and the lineage recount below scans ONLY this
-            # merge's files — the flat layout footer-opened every file
-            # ever written on every merge (O(total history) per run).
-            merge_dir = f"{self.path}/merge_id={merge_id}"
-            to_write.write.mode("append").parquet(merge_dir)
-            # lineage from the just-committed files only (column-pruned
-            # scan of the per-merge directory, never the whole table)
-            try:
-                written = spark.read.parquet(merge_dir)
-            except AnalysisException:
-                # empty batch: parquet write emitted no data files
-                return {"inserted": 0, "partitions": 0}
+        # each merge commits into its own hive-style partition dir:
+        # readers of self.path recover merge_id via partition discovery,
+        # and the lineage recount below scans ONLY this merge's files
+        # (column-pruned), never the whole table's history.
+        merge_dir = f"{self.path}/merge_id={merge_id}"
+        to_write.write.mode("append").parquet(merge_dir)
+        try:
+            written = spark.read.parquet(merge_dir)
+        except AnalysisException:
+            # empty batch: parquet write emitted no data files
+            return {"inserted": 0, "partitions": 0}
         lineage = written.groupBy("part_id").agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(
@@ -264,10 +259,17 @@ class ParquetMergeSink:
             F.col("part_id").alias("partition_id"),
             "n_rows", "n_failures", "bytes_text_out",
         )
-        lineage.write.mode("append").parquet(self.lineage_path)
-
-        stats = written.groupBy().agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("part_id").alias("p"),
-        ).collect()[0]
-        return {"inserted": stats["n"], "partitions": stats["p"]}
+        # one row per written partition, cached: appended as lineage and
+        # collected for the returned counts, so the merge's files are
+        # scanned once (writing the collected rows back through
+        # createDataFrame would round-trip them through Python)
+        lineage = lineage.cache()
+        try:
+            lineage.write.mode("append").parquet(self.lineage_path)
+            rows = lineage.collect()
+        finally:
+            lineage.unpersist()
+        return {
+            "inserted": sum(r["n_rows"] for r in rows),
+            "partitions": len(rows),
+        }

@@ -21,7 +21,7 @@ crawl layer (SURVEY §2 "beyond" table) with robots/sitemap/CDX/WARC.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # RSS 2.0: <item> blocks; plain-element fields. <guid> carries an
@@ -98,15 +98,6 @@ def parse_feed(
         )
     out = parts[0].unionByName(parts[1])
     return out.filter(F.length("url") > 0)
-
-
-def read_feeds(spark: SparkSession, path_glob: str) -> DataFrame:
-    """feed xml files -> parsed entry rows; feed = the file path."""
-    raw = spark.read.text(path_glob, wholetext=True).select(
-        F.input_file_name().alias("feed"),
-        F.col("value").alias("xml"),
-    )
-    return parse_feed(raw, xml_col="xml", feed_col="feed")
 
 
 def oracle_parse_feed(xml_table_sql: str) -> str:

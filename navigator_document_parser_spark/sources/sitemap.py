@@ -1,9 +1,9 @@
 """Sitemap ingestion (sitemaps.org protocol) — the crawl-side discovery
-artifact next to robots.txt (operators/robots.py) and the CDX index
-(sources/warc.py read_cdx): production crawlers seed and refresh their
-frontier from `<urlset>` / `<sitemapindex>` documents, so a curation
-engine needs to turn sitemap XML into (url, lastmod, priority) rows it
-can feed straight into fetch_schedule / url filtering.
+artifact next to robots.txt (operators/robots.py): production crawlers
+seed and refresh their frontier from `<urlset>` / `<sitemapindex>`
+documents, so a curation engine needs to turn sitemap XML into (url,
+lastmod, priority) rows it can feed straight into fetch_schedule / url
+filtering.
 
 From-scratch regex field extraction, NOT an XML parser (no lxml in this
 environment, and sitemap files in the wild are flat machine-generated
@@ -48,9 +48,9 @@ def parse_sitemap(
 
     Emits BOTH leaf `<url>` entries (kind='url') and `<sitemapindex>`
     children (kind='sitemap' — the next fetch wave, which a crawl loop
-    anti-joins against already-fetched sitemap urls exactly like
-    cdx_fetch_plan). loc is required (entries without it are dropped,
-    per the protocol); lastmod/priority optional -> NULL.
+    anti-joins against already-fetched sitemap urls). loc is required
+    (entries without it are dropped, per the protocol); lastmod/priority
+    optional -> NULL.
 
     100 TB shape: map-only codegen projection (regexp_extract_all +
     one explode); a sitemap file is one row, so parallelism is the

@@ -180,7 +180,3 @@ def synth_documents(spark, n_docs: int, partitions: int | None = None):
             yield _rows_for_ids(pdf["id"].to_numpy())
 
     return rng_df.mapInPandas(gen, schema=DOCUMENTS_SCHEMA)
-
-
-def expected_route(i: int) -> str:
-    return "pdf" if (i % 5) == 4 else ("none" if not make_html(i) else "html")

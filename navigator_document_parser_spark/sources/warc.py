@@ -222,330 +222,3 @@ def write_wet(rows: list[tuple[str, str, str]], gzip_members: bool = True) -> by
         rec = head + b"\r\n" + body + b"\r\n\r\n"
         out += gzip.compress(rec) if gzip_members else rec
     return out
-
-
-# --------------------------------------------------------------------------
-# WAT — Common Crawl's metadata companion format
-# --------------------------------------------------------------------------
-
-# WAT rows are link/metadata records, not documents: one row per page
-# with its outgoing links — the input for link-graph analytics (domain
-# quality scores, crawl prioritization).
-WAT_SCHEMA = (
-    "url string, warc_ts timestamp, title string, "
-    "links array<struct<url:string,text:string>>"
-)
-
-
-def _wat_records_to_rows(blob: bytes) -> list[dict]:
-    """One WAT archive file -> link-metadata rows.
-
-    WAT wraps a JSON envelope per crawled URI in the same WARC framing
-    ('metadata' records). Only the stable, useful subset is projected:
-    page title and outgoing links (url + anchor text) from
-    Envelope.Payload-Metadata.HTTP-Response-Metadata.HTML-Metadata.
-    Malformed JSON or missing sections degrade to empty values — one
-    hostile record never kills the shard task.
-    """
-    import json
-
-    if blob[:2] == b"\x1f\x8b":
-        try:
-            blob = gzip.GzipFile(fileobj=io.BytesIO(blob)).read()
-        except Exception:
-            return []
-    rows = []
-    for headers, payload in _iter_warc_records(blob):
-        if headers.get("warc-type") != "metadata":
-            continue
-        url = headers.get("warc-target-uri", "")
-        ts = _parse_warc_date(headers.get("warc-date", ""))
-        if not url.startswith(("http://", "https://")) or ts is None:
-            continue
-        title, links = None, []
-        try:
-            env = json.loads(payload.decode("utf-8", "replace"))
-            html_meta = (
-                env.get("Envelope", {})
-                .get("Payload-Metadata", {})
-                .get("HTTP-Response-Metadata", {})
-                .get("HTML-Metadata", {})
-            )
-            head = html_meta.get("Head", {})
-            if isinstance(head, dict):
-                t = head.get("Title")
-                title = t if isinstance(t, str) else None
-            raw_links = html_meta.get("Links", [])
-            if isinstance(raw_links, list):
-                # anchor text rides as 'text' when the crawler captured
-                # it (CC WAT emits it for <a> links) — a core link-
-                # based quality/ranking signal, so it is projected too
-                links = [
-                    {
-                        "url": l["url"],
-                        "text": (
-                            l["text"]
-                            if isinstance(l.get("text"), str)
-                            else None
-                        ),
-                    }
-                    for l in raw_links
-                    if isinstance(l, dict) and isinstance(l.get("url"), str)
-                ]
-        except Exception:
-            pass  # keep the row: the URI + timestamp are still useful
-        rows.append({"url": url, "warc_ts": ts, "title": title,
-                     "links": links})
-    return rows
-
-
-def read_wat(spark: SparkSession, path_glob: str) -> DataFrame:
-    """*.warc.wat / *.warc.wat.gz files -> (url, warc_ts, title, links)
-    link-metadata DataFrame ('metadata' records, JSON envelopes)."""
-    files = spark.read.format("binaryFile").load(path_glob).select("content")
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["url", "warc_ts", "title", "links"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for blob in pdf["content"]:
-                rows.extend(_wat_records_to_rows(bytes(blob)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(parse, schema=WAT_SCHEMA)
-
-
-def _host(c):
-    """scheme://HOST[/:?#...] -> lowercase host ('' when unparseable).
-    ONE definition shared by host_link_graph and anchor_terms — the
-    same URL must bucket to the same host in the link graph and the
-    anchor index (review finding: a diverging copy silently splits
-    host identities between pagerank and anchor_terms)."""
-    from pyspark.sql import functions as F
-
-    return F.lower(
-        F.regexp_extract(c, r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]+)", 1)
-    )
-
-
-def host_link_graph(wat: DataFrame) -> DataFrame:
-    """Aggregate WAT link rows into host-level edges:
-    (src_host, dst_host, n_links). The standard first step toward
-    link-based domain quality (harmonic/PageRank-style scores) used to
-    weight crawl data. Pure built-ins: explode + parse_url-equivalent
-    regex + one hash aggregate (map-side combined)."""
-    from pyspark.sql import functions as F
-
-    e = wat.select(
-        _host(F.col("url")).alias("src_host"),
-        F.explode("links").alias("l"),
-    ).select("src_host", _host(F.col("l.url")).alias("dst_host"))
-    return (
-        e.filter(
-            (F.col("src_host") != "")
-            & (F.col("dst_host") != "")
-            & (F.col("src_host") != F.col("dst_host"))
-        )
-        .groupBy("src_host", "dst_host")
-        .agg(F.count(F.lit(1)).alias("n_links"))
-    )
-
-
-def anchor_terms(wat: DataFrame, k: int = 10) -> DataFrame:
-    """Top anchor-text terms pointing AT each host:
-    (dst_host, term, n, rank). Anchor text is what OTHER pages call a
-    page — the classic off-page relevance/quality signal (search
-    engines have ranked on it since the beginning; curation pipelines
-    use it to label/weight domains). Self-host links are excluded so a
-    site cannot vote for itself.
-
-    Plan: explode links -> lower/split anchor text -> ONE hash
-    aggregate on (dst_host, term) with map-side combine -> per-host
-    top-k window over the (already tiny) per-host term counts.
-    Deterministic ties: (n desc, term asc)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    terms = (
-        wat.select(
-            _host(F.col("url")).alias("src_host"),
-            F.explode("links").alias("l"),
-        )
-        .select(
-            "src_host",
-            _host(F.col("l.url")).alias("dst_host"),
-            F.explode(
-                F.split(F.lower(F.coalesce(F.col("l.text"), F.lit(""))),
-                        r"\s+")
-            ).alias("term"),
-        )
-        .filter(
-            # src_host != '' matches host_link_graph: an unparseable
-            # source URL must not cast votes (and could self-vote past
-            # the src != dst check otherwise — review finding)
-            (F.col("src_host") != "")
-            & (F.col("dst_host") != "")
-            & (F.col("src_host") != F.col("dst_host"))
-            & (F.length("term") > 1)
-        )
-    )
-    counts = terms.groupBy("dst_host", "term").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    w = Window.partitionBy("dst_host").orderBy(
-        F.col("n").desc(), F.col("term").asc()
-    )
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("dst_host", "term", "n", "rank")
-    )
-
-
-def write_wat(
-    rows: list[tuple[str, str, str | None, list]],
-    gzip_members: bool = True,
-) -> bytes:
-    """Build WAT bytes from (url, iso_date, title, links) — the test
-    fixture generator (one gzip member per 'metadata' record). Each
-    link is a bare url string or a (url, anchor_text) tuple."""
-    import json
-
-    out = b""
-    for url, date, title, link_entries in rows:
-        link_objs = []
-        for entry in link_entries:
-            if isinstance(entry, tuple):
-                u, txt = entry
-                link_objs.append(
-                    {"path": "A@/href", "url": u, "text": txt}
-                )
-            else:
-                link_objs.append({"path": "A@/href", "url": entry})
-        env = {
-            "Envelope": {
-                "Payload-Metadata": {
-                    "HTTP-Response-Metadata": {
-                        "HTML-Metadata": {
-                            "Head": {"Title": title},
-                            "Links": link_objs,
-                        }
-                    }
-                }
-            }
-        }
-        body = json.dumps(env).encode("utf-8")
-        head = (
-            f"WARC/1.0\r\n"
-            f"WARC-Type: metadata\r\n"
-            f"WARC-Target-URI: {url}\r\n"
-            f"WARC-Date: {date}\r\n"
-            f"Content-Length: {len(body)}\r\n"
-            f"Content-Type: application/json\r\n"
-        ).encode()
-        rec = head + b"\r\n" + body + b"\r\n\r\n"
-        out += gzip.compress(rec) if gzip_members else rec
-    return out
-
-
-# ---------------------------------------------------------------------------
-# CDX index shards (the fourth Common-Crawl artifact, next to WARC/WET/WAT)
-# ---------------------------------------------------------------------------
-
-# CDXJ line format (cc-index): `urlkey SP timestamp14 SP json`, e.g.
-#   org,example)/path 20240101120000 {"url": "...", "mime": "text/html",
-#   "status": "200", "digest": "...", "length": "1234", "offset": "56",
-#   "filename": "crawl-data/.../x.warc.gz"}
-# The index is how production pipelines PLAN a crawl read (dedup by
-# digest, select by mime/status, locate the byte range in the WARC
-# shard) without touching the archives themselves.
-CDX_JSON_SCHEMA = (
-    "url string, mime string, status string, digest string, "
-    "length string, offset string, filename string"
-)
-
-
-def read_cdx(spark: SparkSession, path_glob: str) -> DataFrame:
-    """*.cdx / cdx-*.gz index shards -> one row per crawled capture:
-    (urlkey, warc_ts, url, mime, status, digest, length, offset,
-    filename).
-
-    Unlike the WARC/WET/WAT readers (binary framing -> mapInPandas),
-    CDX is line-oriented, so the parse is PURE BUILT-INS — text source
-    (gzip decoded by the codec), split-limit-3, from_json, try_casts —
-    and the whole row path stays in WholeStageCodegen with zero Python.
-    Malformed lines degrade to null columns (try_* under ANSI mode),
-    never exceptions — the ingestion-boundary never-fail rule.
-    """
-    from pyspark.sql import functions as F
-
-    lines = spark.read.text(path_glob).filter(
-        F.length(F.trim(F.col("value"))) > 0
-    )
-    parts = F.split(F.col("value"), " ", 3)
-    # try_element_at, not element_at: under ANSI mode element_at
-    # THROWS on a <3-token line (one truncated line would kill the
-    # whole ingestion job — found in review, repro'd live)
-    j = F.from_json(F.try_element_at(parts, F.lit(3)), CDX_JSON_SCHEMA)
-    return lines.select(
-        F.try_element_at(parts, F.lit(1)).alias("urlkey"),
-        F.try_to_timestamp(
-            F.try_element_at(parts, F.lit(2)), F.lit("yyyyMMddHHmmss")
-        ).alias("warc_ts"),
-        j["url"].alias("url"),
-        j["mime"].alias("mime"),
-        j["status"].try_cast("int").alias("status"),
-        j["digest"].alias("digest"),
-        j["length"].try_cast("bigint").alias("length"),
-        j["offset"].try_cast("bigint").alias("offset"),
-        j["filename"].alias("filename"),
-    )
-
-
-def cdx_fetch_plan(
-    cdx: DataFrame,
-    committed: DataFrame | None = None,
-    statuses: tuple = (200,),
-    mime_prefixes: tuple = ("text/html",),
-) -> DataFrame:
-    """Turn a CDX index into the work list an incremental crawl job
-    should actually fetch: keep wanted statuses/mime types, keep ONE
-    capture per content digest (Common Crawl stores identical content
-    under many URLs — first by (warc_ts, urlkey) wins, via a map-side-
-    combinable min-struct aggregate, never a window over the digest:
-    hot digests can't stall a partition), then drop captures already
-    committed in the sink (left anti-join on the sink identity key
-    (url, warc_ts)).
-
-    Index-driven planning touches ZERO archive bytes: at 100 TB the
-    index is ~1/1000 the corpus size, and this whole plan is one
-    filter + one hash aggregate + one anti-join — the same
-    prune-before-compute discipline as sink.prune_extraction_input.
-    """
-    from pyspark.sql import functions as F
-
-    mime_ok = F.lit(False)
-    for p in mime_prefixes:
-        mime_ok = mime_ok | F.col("mime").startswith(p)
-    f = cdx.filter(
-        F.col("status").isin(list(statuses))
-        & mime_ok
-        & F.col("digest").isNotNull()
-        & F.col("warc_ts").isNotNull()
-    )
-    first = f.groupBy("digest").agg(
-        F.min(
-            F.struct(
-                "warc_ts", "urlkey", "url", "mime", "status",
-                "length", "offset", "filename",
-            )
-        ).alias("w")
-    )
-    plan = first.select("digest", "w.*")
-    if committed is not None:
-        plan = plan.join(
-            committed.select("url", "warc_ts"),
-            ["url", "warc_ts"],
-            "left_anti",
-        )
-    return plan

@@ -18,10 +18,7 @@ urls serving identical bytes collapse to one extraction.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-from ..schema import DOCUMENTS_SCHEMA
 
 
 def content_fingerprint():
@@ -32,36 +29,3 @@ def content_fingerprint():
         F.col("html").isNotNull() & (F.length(F.col("html")) > 0),
         F.md5(F.col("html")),
     ).otherwise(F.md5(F.coalesce(F.col("text"), F.lit(""))))
-
-
-def start_content_dedup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "24 hours",
-    available_now: bool = True,
-):
-    """readStream(documents dir) -> first-arrival-per-content -> parquet.
-
-    Event time = warc_ts (the crawl timestamp). A copy arriving more
-    than ``watermark`` after the watermark passed its original MAY be
-    re-emitted (state already evicted) — the downstream keyed sink still
-    guarantees at-most-once per key, so the pair is exactly the
-    bounded-state + exact-commit layering a production pipeline uses.
-    """
-    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(input_dir)
-    deduped = (
-        stream.withColumn("fp", content_fingerprint())
-        .withWatermark("warc_ts", watermark)
-        .dropDuplicatesWithinWatermark(["fp"])
-    )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

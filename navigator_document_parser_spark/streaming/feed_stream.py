@@ -5,8 +5,7 @@ continuously (the fetcher polls the urls meta_tags discovered), each
 micro-batch is parsed with sources/feed.parse_feed, and only urls the
 frontier has NEVER seen are appended — discovery is monotone, so the
 "memory" is the committed output itself (a stream-static anti-join per
-micro-batch, the snapshot_stream posture: no watermark, no state
-store; a frontier url is forever).
+micro-batch: no watermark, no state store; a frontier url is forever).
 
 Within-batch duplicates (the same url in two feeds, or one feed file
 landing twice in a batch) collapse to the smallest (feed, url) row —
@@ -17,7 +16,7 @@ one and the anti-join is a plain equi-join the planner broadcasts or
 shuffles per micro-batch as its statistics dictate. At frontier sizes
 where a per-batch scan of the committed table hurts, swap the static
 read for the Bloom-prefiltered committed view (dedup_bloom) — the
-documented seam, same as snapshot_stream.
+documented seam.
 """
 
 from __future__ import annotations

@@ -18,46 +18,6 @@ from ..plans.sink import ParquetMergeSink
 from ..schema import DOCUMENTS_SCHEMA
 
 
-def start_extraction_stream(
-    spark: SparkSession,
-    input_dir: str,
-    sink_path: str,
-    checkpoint_dir: str,
-    run_prefix: str = "stream",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """readStream(documents parquet dir) -> extract -> idempotent merge.
-
-    ``available_now=True`` drains everything currently in the directory
-    and stops (test/backfill mode); False tails the directory forever.
-    """
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-
-    sink = ParquetMergeSink(sink_path)
-
-    def process_batch(batch_df, batch_id: int):
-        run_id = f"{run_prefix}-{batch_id}"
-        spark_b = batch_df.sparkSession
-        # the checkpoint already prevents batch REPLAY; this prunes rows
-        # whose key is committed but that re-arrive in NEW files
-        # (duplicate data landing) before the extraction UDF runs
-        batch_df = sink.prune_extraction_input(spark_b, batch_df)
-        extracted = run_extraction(batch_df, run_id=run_id)
-        sink.merge(spark_b, extracted, run_id)
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def start_dedup_extraction_stream(
     spark: SparkSession,
     input_dir: str,
@@ -82,6 +42,9 @@ def start_dedup_extraction_stream(
     path the batch job composes, so draining a directory through this
     stream and running jobs/extract.py over it produce the same
     extracted text per surviving document (pinned by pytest).
+
+    ``available_now=True`` drains everything currently in the directory
+    and stops (backfill mode); False tails the directory forever.
     """
     from .dedup_stream import content_fingerprint
 
@@ -98,6 +61,9 @@ def start_dedup_extraction_stream(
     def process_batch(batch_df, batch_id: int):
         run_id = f"{run_prefix}-{batch_id}"
         spark_b = batch_df.sparkSession
+        # the checkpoint already prevents batch REPLAY; this prunes rows
+        # whose key is committed but that re-arrive in NEW files
+        # (duplicate data landing) before the extraction UDF runs
         batch_df = sink.prune_extraction_input(spark_b, batch_df)
         extracted = run_extraction(batch_df, run_id=run_id)
         sink.merge(spark_b, extracted, run_id)

@@ -513,12 +513,12 @@ def test_knn_ivf_assignment_is_shuffle_free(spark):
     a crossJoin + window: the only exchanges in the search plan are the
     final top-k window (and AQE reads), never an N*C ranking shuffle."""
     from navigator_document_parser_spark.operators.similarity import (
-        ivf_train,
+        ivf_train_sampled,
         knn_ivf,
     )
 
     emb = load(spark, "embeddings")
-    cents = ivf_train(emb, n_centroids=4, iterations=1)
+    cents = ivf_train_sampled(emb, n_centroids=4)
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -602,26 +602,6 @@ def test_multimodal_features_deterministic(spark):
         assert [round(x, 5) for x in r["features"]] == [
             round(x, 5) for x in expected
         ]
-
-
-def test_resize_images_shape_and_determinism(spark):
-    from navigator_document_parser_spark.operators.multimodal import (
-        _fake_raster,
-        resize_images,
-        synth_media,
-    )
-
-    media = synth_media(spark, 30, partitions=3)
-    out = resize_images(media, width=8, height=4)
-    rows = {r["media_id"]: r for r in out.collect()}
-    n_images = media.filter("kind = 'image'").count()
-    assert len(rows) == n_images and n_images > 0
-    payloads = {r["media_id"]: bytes(r["payload"])
-                for r in media.filter("kind = 'image'").collect()}
-    for mid, r in rows.items():
-        assert (r["width"], r["height"]) == (8, 4)
-        assert len(bytes(r["payload"])) == 8 * 4
-        assert bytes(r["payload"]) == _fake_raster(payloads[mid], 8, 4)
 
 
 def test_sample_video_frames_fanout(spark):
@@ -1032,6 +1012,47 @@ def test_keyword_search_topk_and_tiebreak(spark):
     out = keyword_search(df, [(1, ["scan"])], k=4).toPandas()
     assert list(out.doc_id) == [0, 1, 2, 3]
     assert list(out["rank"]) == [1, 2, 3, 4]
+
+
+def test_search_null_doc_id_matches_oracles(spark):
+    """A NULL doc_id row is no document: it must not add to any term's
+    document frequency (the oracles count DISTINCT doc_id), and where it
+    ties on score it ranks after every real doc_id, as in DuckDB."""
+    from navigator_document_parser_spark.operators.search import (
+        bm25_search,
+        keyword_search,
+        oracle_bm25_search,
+        oracle_keyword_search,
+    )
+
+    rows = [
+        (1, "hash join scan"),
+        (2, "hash scan"),
+        (3, "join filter"),
+        (4, "window agg"),
+        (None, "hash join"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT * FROM (VALUES "
+        + ", ".join(
+            f"({'NULL' if d is None else d}, '{t}')" for d, t in rows
+        )
+        + ") t(doc_id, text)"
+    )
+    queries = [(1, ["hash"]), (2, ["hash", "join"]), (3, ["join"])]
+    compare(
+        keyword_search(df, queries, k=10),
+        con.sql(oracle_keyword_search(queries, k=10)).df(),
+        ["query_id", "rank"],
+    )
+    compare(
+        bm25_search(df, queries, k=10),
+        con.sql(oracle_bm25_search(queries, k=10)).df(),
+        ["query_id", "rank"],
+        float_cols=("score",),
+    )
 
 
 def test_paragraph_dedup_first_occurrence_wins(spark):

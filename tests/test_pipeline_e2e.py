@@ -175,31 +175,28 @@ class TestMergeSink:
     def teardown_method(self, m):
         shutil.rmtree(self.dir, ignore_errors=True)
 
-    def test_legacy_flat_layout_still_idempotent(self, spark):
-        """Tables written by the pre-partitioned sink (flat part files,
-        merge_id as a data column) must keep their insert-if-absent
-        semantics: the new code detects the layout and appends flat
-        instead of mixing directory depths (which would break partition
-        discovery and silently disable the anti-join)."""
+    def test_flat_layout_is_rejected(self, spark):
+        """A table whose root holds part files (the flat layout, merge_id
+        as a data column) is refused with an error naming it, and nothing
+        is written: mixing it with per-merge directories would break
+        partition discovery and silently disable the anti-join."""
+        import os
+
         docs = synth_documents(spark, 20, partitions=2)
         ext = run_extraction(docs, run_id="old")
-        # simulate a legacy table exactly as the old sink laid it out
+        out_dir = self.dir + "/out"
         ext.withColumn("part_id", F.spark_partition_id()).withColumn(
             "merge_id", F.lit("old-run-deadbeef")
-        ).write.parquet(self.dir + "/out")
+        ).write.parquet(out_dir)
+        before = sorted(os.listdir(out_dir))
 
-        sink = ParquetMergeSink(self.dir + "/out")
-        # run-twice on the legacy table: nothing re-inserted
-        r = sink.merge(spark, run_extraction(docs, run_id="re"), "re")
-        assert r["inserted"] == 0
-
-        # a superset batch adds only the new rows, table stays readable
+        sink = ParquetMergeSink(out_dir)
         more = synth_documents(spark, 30, partitions=2)
-        r2 = sink.merge(spark, run_extraction(more, run_id="r2"), "r2")
-        assert r2["inserted"] == 10
-        out = sink.read(spark)
-        assert out.count() == 30
-        assert out.select("url").distinct().count() == 30
+        with pytest.raises(ValueError, match=out_dir):
+            sink.merge(spark, run_extraction(more, run_id="r2"), "r2")
+        assert sorted(os.listdir(out_dir)) == before
+        assert not os.path.exists(sink.lineage_path)
+        assert sink.read(spark).count() == 20
 
     def test_idempotent_and_resumable(self, spark):
         docs = synth_documents(spark, 40, partitions=2)
@@ -241,14 +238,14 @@ def test_streaming_ingestion(spark):
     import os
 
     from navigator_document_parser_spark.streaming.stream_job import (
-        start_extraction_stream,
+        start_dedup_extraction_stream,
     )
 
     base = tempfile.mkdtemp(prefix="ndps-stream-")
     try:
         in_dir = os.path.join(base, "in")
         synth_documents(spark, 30, partitions=2).write.parquet(in_dir)
-        q = start_extraction_stream(
+        q = start_dedup_extraction_stream(
             spark,
             in_dir,
             os.path.join(base, "out"),
@@ -260,7 +257,7 @@ def test_streaming_ingestion(spark):
 
         # restart the stream over the same directory: checkpoint + merge
         # semantics -> still 30 rows
-        q2 = start_extraction_stream(
+        q2 = start_dedup_extraction_stream(
             spark,
             in_dir,
             os.path.join(base, "out"),

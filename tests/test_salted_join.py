@@ -1,39 +1,4 @@
-"""salted_join correctness: identical result to a plain join on skewed data."""
-
-from pyspark.sql import functions as F
-
-from navigator_document_parser_spark.operators.joins import salted_join
-
-
-def test_salted_join_equals_plain_join(spark):
-    # heavy skew: 90% of fact rows hit one key
-    fact = spark.createDataFrame(
-        [(1 if i % 10 else i % 7, i, float(i)) for i in range(2000)],
-        "k long, fid long, v double",
-    )
-    dim = spark.createDataFrame(
-        [(i, f"dim{i}") for i in range(7)], "k long, name string"
-    )
-
-    plain = fact.join(dim, ["k"]).select("k", "fid", "v", "name")
-    salted = salted_join(fact, dim, ["k"], salt=8).select(
-        "k", "fid", "v", "name"
-    )
-    a = sorted(map(tuple, plain.collect()))
-    b = sorted(map(tuple, salted.collect()))
-    assert a == b
-    assert len(a) > 0
-
-
-def test_salted_left_join_preserves_unmatched(spark):
-    fact = spark.createDataFrame(
-        [(1, 10), (2, 20), (99, 30)], "k long, fid long"
-    )
-    dim = spark.createDataFrame([(1, "a"), (2, "b")], "k long, name string")
-    out = salted_join(fact, dim, ["k"], salt=4, how="left")
-    rows = {r["fid"]: r["name"] for r in out.collect()}
-    assert rows == {10: "a", 20: "b", 30: None}
-    assert out.count() == 3
+"""as-of and range join correctness against plain-join formulations."""
 
 
 def test_asof_join_semantics(spark):

@@ -206,17 +206,6 @@ def test_parse_feed_multiline_entries_flattened(spark):
     assert list(out) == [("rss", " https://x.io/p ")]
 
 
-def test_read_feeds_from_files(spark, tmp_path):
-    from navigator_document_parser_spark.sources.feed import read_feeds
-
-    (tmp_path / "a.xml").write_text(_RSS)
-    (tmp_path / "b.xml").write_text(_ATOM)
-    out = read_feeds(spark, str(tmp_path / "*.xml"))
-    assert out.count() == 4
-    fmts = {r.format for r in out.select("format").distinct().collect()}
-    assert fmts == {"rss", "atom"}
-
-
 # ---------------------------------------------------------------------------
 # semantic_clusters — transitive closure of embedding near-dup pairs
 # ---------------------------------------------------------------------------

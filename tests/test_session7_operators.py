@@ -11,7 +11,6 @@ from navigator_document_parser_spark.operators.layout import (
     rendezvous_shards,
 )
 from navigator_document_parser_spark.operators.text import (
-    encoding_repair,
     fix_mojibake,
     mojibake_pairs,
 )
@@ -111,17 +110,15 @@ def test_fix_mojibake_roundtrip(spark):
     for bad, good in mojibake_pairs():
         corrupted = corrupted.replace(good, bad)
     d = spark.createDataFrame([(0, corrupted)], ["doc_id", "text"])
-    out = encoding_repair(d).collect()[0]
-    assert out.text_fixed == clean
-    assert out.chars_repaired == len(corrupted) - len(clean)
-    assert out.n_chars == len(corrupted)
+    out = d.select(fix_mojibake(F.col("text")).alias("f")).collect()[0]
+    assert out.f == clean
 
 
 def test_fix_mojibake_clean_text_untouched(spark):
     clean = "plain ascii text stays exactly as-is."
     d = spark.createDataFrame([(0, clean)], ["doc_id", "text"])
-    out = encoding_repair(d).collect()[0]
-    assert out.text_fixed == clean and out.chars_repaired == 0
+    out = d.select(fix_mojibake(F.col("text")).alias("f")).collect()[0]
+    assert out.f == clean
 
 
 def test_entry_suffix_covers_every_good(spark):

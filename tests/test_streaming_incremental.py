@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from navigator_document_parser_spark.sources.synth import synth_documents
 from navigator_document_parser_spark.streaming.stream_job import (
-    start_extraction_stream,
+    start_dedup_extraction_stream,
 )
 
 
@@ -30,11 +30,14 @@ def test_continuous_ingestion_picks_up_new_files(spark):
         n_first, n_second = first.count(), second.count()
 
         first.write.parquet(in_dir)  # initial files
-        q = start_extraction_stream(
+        # the --tail mode of jobs/extract_stream.py; the fixture's warc_ts
+        # span 40 hours, so the watermark must outlast them or the second
+        # wave would arrive as late data
+        q = start_dedup_extraction_stream(
             spark, in_dir, out_dir,
             os.path.join(base, "ckpt"),
+            watermark="7 days",
             available_now=False,
-            max_files_per_trigger=8,
         )
         def wait_for(n_rows: int):
             deadline = time.time() + 120
@@ -77,9 +80,6 @@ def test_dedup_extraction_stream_matches_batch(spark):
     per distinct blob, byte-identical text, and a restart adds nothing.
     """
     from navigator_document_parser_spark.plans.job import run_extraction
-    from navigator_document_parser_spark.streaming.stream_job import (
-        start_dedup_extraction_stream,
-    )
 
     base = tempfile.mkdtemp(prefix="ndps-dstream-")
     in_dir = os.path.join(base, "in")

@@ -183,179 +183,3 @@ def test_wet_reader_and_curate_e2e(spark):
         assert set(out.columns) >= {"doc_id", "text"}
     finally:
         shutil.rmtree(base, ignore_errors=True)
-
-
-def test_wat_reader_and_host_link_graph(spark):
-    """WAT 'metadata' records parse into (url, ts, title, links) rows;
-    malformed JSON degrades to an empty-link row; host_link_graph
-    aggregates cross-host edges with counts."""
-    from navigator_document_parser_spark.sources.warc import (
-        host_link_graph,
-        read_wat,
-        write_wat,
-    )
-
-    base = tempfile.mkdtemp()
-    try:
-        wat = write_wat([
-            ("https://a.example.org/x", "2024-03-01T00:00:00Z", "Page X",
-             [("https://b.example.org/1", "best spark guide"),
-              ("https://b.example.org/2", "spark guide"),
-              "https://a.example.org/self", "/relative/skipped"]),
-            ("https://a.example.org/y", "2024-03-01T00:00:01Z", None,
-             ["https://c.example.org/"]),
-        ])
-        # a hostile record: valid WARC framing, garbage JSON payload
-        body = b"{not json"
-        head = (
-            "WARC/1.0\r\nWARC-Type: metadata\r\n"
-            "WARC-Target-URI: https://bad.example.org/\r\n"
-            "WARC-Date: 2024-03-01T00:00:02Z\r\n"
-            f"Content-Length: {len(body)}\r\n"
-        ).encode()
-        wat += gzip.compress(head + b"\r\n" + body + b"\r\n\r\n")
-        # and a stray response record the WAT reader must skip
-        wat += _archive([99])
-        with open(os.path.join(base, "a.warc.wat.gz"), "wb") as f:
-            f.write(wat)
-
-        rows = {r["url"]: r for r in
-                read_wat(spark, base + "/*.warc.wat.gz").collect()}
-        assert len(rows) == 3
-        assert rows["https://a.example.org/x"]["title"] == "Page X"
-        assert len(rows["https://a.example.org/x"]["links"]) == 4
-        l0 = rows["https://a.example.org/x"]["links"][0]
-        assert l0["url"] == "https://b.example.org/1"
-        assert l0["text"] == "best spark guide"
-        assert rows["https://a.example.org/x"]["links"][2]["text"] is None
-        assert rows["https://a.example.org/y"]["title"] is None
-        # hostile JSON: row survives with empty links, task never dies
-        assert rows["https://bad.example.org/"]["links"] == []
-
-        edges = {
-            (r.src_host, r.dst_host): r.n_links
-            for r in host_link_graph(
-                read_wat(spark, base + "/*.warc.wat.gz")
-            ).collect()
-        }
-        # self-host and relative (host-less) links are excluded
-        assert edges == {
-            ("a.example.org", "b.example.org"): 2,
-            ("a.example.org", "c.example.org"): 1,
-        }
-
-        # anchor-term index: what other hosts call b.example.org
-        from navigator_document_parser_spark.sources.warc import (
-            anchor_terms,
-        )
-
-        at = {
-            (r.dst_host, r.term): (r.n, r.rank)
-            for r in anchor_terms(
-                read_wat(spark, base + "/*.warc.wat.gz"), k=2
-            ).collect()
-        }
-        # 'spark' and 'guide' appear twice; top-2 cut drops 'best';
-        # ties break term-asc so guide ranks before spark
-        assert at == {
-            ("b.example.org", "guide"): (2, 1),
-            ("b.example.org", "spark"): (2, 2),
-        }
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_read_cdx(spark):
-    """CDXJ index shards parse via pure built-ins: good lines fully
-    typed, malformed lines degrade to null columns (never-throw under
-    ANSI mode), gzip shards decode in the text source."""
-    import gzip
-    import os
-    import shutil
-    import tempfile
-
-    from navigator_document_parser_spark.sources.warc import read_cdx
-
-    base = tempfile.mkdtemp(prefix="ndps-cdx-")
-    try:
-        good = (
-            'org,example)/x 20240101120000 {"url": '
-            '"https://example.org/x", "mime": "text/html", "status": '
-            '"200", "digest": "AAAA", "length": "1234", "offset": '
-            '"56", "filename": "crawl/a.warc.gz"}'
-        )
-        nojson = "org,example)/y 20240202000000 not-json-at-all"
-        short = "single-token-line"  # <3 tokens: must not kill the job
-        badts = (
-            'org,example)/z notadate {"url": "https://example.org/z", '
-            '"status": "30x"}'
-        )
-        with gzip.open(os.path.join(base, "cdx-00000.gz"), "wt") as f:
-            f.write(good + "\n\n" + nojson + "\n" + badts + "\n"
-                    + short + "\n")
-
-        rows = {r["urlkey"] or f"row{i}": r
-                for i, r in enumerate(read_cdx(
-                    spark, base + "/cdx-*.gz").collect())}
-        assert len(rows) == 4  # blank line dropped, bad lines kept
-        g = rows["org,example)/x"]
-        assert g["url"] == "https://example.org/x"
-        assert g["status"] == 200 and g["length"] == 1234
-        assert g["offset"] == 56 and g["digest"] == "AAAA"
-        assert g["warc_ts"].year == 2024
-        assert rows["org,example)/y"]["url"] is None  # bad JSON -> nulls
-        z = rows["org,example)/z"]
-        assert z["warc_ts"] is None  # bad timestamp -> null, not throw
-        assert z["status"] is None   # non-numeric status -> null
-        assert z["url"] == "https://example.org/z"
-        # truncated line: try_element_at degrades to nulls under ANSI
-        # (element_at would abort the whole job — review finding)
-        t = rows["single-token-line"]
-        assert t["warc_ts"] is None and t["url"] is None
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_cdx_fetch_plan(spark):
-    """Digest dedup keeps the earliest capture, status/mime filters
-    apply, and already-committed (url, warc_ts) pairs are pruned."""
-    from pyspark.sql import functions as F
-
-    from navigator_document_parser_spark.sources.warc import (
-        cdx_fetch_plan,
-    )
-
-    cdx = spark.createDataFrame(
-        [
-            # digest D1 captured twice: the 0102 capture wins (earlier)
-            ("k/a", "2024-01-02 00:00:00", "https://a/x", "text/html",
-             200, "D1", 10, 0, "f1"),
-            ("k/b", "2024-01-03 00:00:00", "https://b/x", "text/html",
-             200, "D1", 10, 0, "f2"),
-            # wrong status / wrong mime / null digest all drop
-            ("k/c", "2024-01-01 00:00:00", "https://c/x", "text/html",
-             404, "D2", 10, 0, "f3"),
-            ("k/d", "2024-01-01 00:00:00", "https://d/x", "image/png",
-             200, "D3", 10, 0, "f4"),
-            ("k/e", "2024-01-01 00:00:00", "https://e/x", "text/html",
-             200, None, 10, 0, "f5"),
-            # D4 is new and survives; D5 is already committed
-            ("k/f", "2024-01-05 00:00:00", "https://f/x", "text/html",
-             200, "D4", 10, 0, "f6"),
-            ("k/g", "2024-01-06 00:00:00", "https://g/x", "text/html",
-             200, "D5", 10, 0, "f7"),
-        ],
-        "urlkey string, warc_ts string, url string, mime string, "
-        "status int, digest string, length long, offset long, "
-        "filename string",
-    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
-    committed = spark.createDataFrame(
-        [("https://g/x", "2024-01-06 00:00:00")],
-        "url string, warc_ts string",
-    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
-
-    plan = {r["digest"]: r for r in
-            cdx_fetch_plan(cdx, committed).collect()}
-    assert set(plan) == {"D1", "D4"}
-    assert plan["D1"]["url"] == "https://a/x"  # earliest capture won
-    assert plan["D1"]["filename"] == "f1"
