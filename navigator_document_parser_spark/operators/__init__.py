@@ -65,6 +65,29 @@ def ratio4_sql(num: str, den: str) -> str:
     )
 
 
+# Row bound of every size-selected driver fast path (collect_if_small).
+# For the graph operators it counts symmetric edge rows: 1M rows of two
+# longs is ~16 MB on the driver.
+DRIVER_MAX_ROWS = 1 << 20
+
+
+def collect_if_small(df, non_null=()):
+    """The one gate in front of a driver fast path: collect ``df`` as
+    pandas when it has at most DRIVER_MAX_ROWS rows and no NULL in the
+    ``non_null`` columns, else return None and let the caller run its
+    distributed path. One action (a LIMIT collect, so a frame over the
+    bound never reaches the driver whole); the size alone picks the
+    path, and the distributed path is the reference the fast replay is
+    tested against. NULLs are not orderable on the driver, so they go
+    to the distributed path too."""
+    pdf = df.limit(DRIVER_MAX_ROWS + 1).toPandas()
+    if len(pdf) > DRIVER_MAX_ROWS or any(
+        pdf[c].isna().any() for c in non_null
+    ):
+        return None
+    return pdf
+
+
 def materialize_concurrently(*thunks):
     """Run independent materialization thunks (each typically ending in
     an eager localCheckpoint) in parallel driver threads and return

@@ -23,7 +23,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from navigator_document_parser_spark.operators import ratio4, ratio4_sql
+from navigator_document_parser_spark.operators import (
+    collect_if_small,
+    ratio4,
+    ratio4_sql,
+)
 
 
 # --------------------------------------------------------------------------
@@ -215,9 +219,6 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iterations: int = 20,
-    check_every: int = 2,
-    max_driver_edges: int = 2_000_000,
 ) -> DataFrame:
     """Min-label propagation over the duplicate-pair graph.
 
@@ -226,14 +227,13 @@ def connected_components(
     round joins the current labels across edges and takes the min, then
     compresses label chains (comp := comp(comp)) — O(log diameter)
     rounds; duplicate clusters are near-cliques from LSH banding, so 1-2
-    rounds in practice.
+    rounds in practice. Rounds run until the fixpoint.
 
-    Driver-action batching: the old shape ran one Spark job PER round
-    (checkpoint + convergence collect each round), which made job-launch
-    overhead the dominant cost on all but huge graphs. Now
-    ``check_every`` rounds are chained into ONE job before the
-    convergence collect; a no-change result in the LAST chained round is
-    a fixpoint (hash-min is monotone), so correctness is unaffected.
+    Driver-action batching: two rounds are chained into ONE job before
+    the convergence collect (a job per round makes job-launch overhead
+    the dominant cost on all but huge graphs); a no-change result in
+    the LAST chained round is a fixpoint (hash-min is monotone), so
+    correctness is unaffected.
     The edge table is eagerly checkpointed once (it is re-read by every
     round — lazy barriers race under concurrent branch materialization,
     CLAUDE.md lesson 7); label lineage is truncated at each collect.
@@ -241,11 +241,10 @@ def connected_components(
     COST BOUND: an unmaterialized round's labels feed ~3 places in the
     next round's plan (neighbor join + stepped + the pointer-jump
     self-join) and Spark does not dedupe common subplans — chained
-    rounds re-execute earlier ones ~3^(k-1) times, so ``check_every``
-    is clamped to <= 3 (2 is the measured sweet spot: job-launch
-    savings beat the single recompute level).
+    rounds re-execute earlier ones ~3^(k-1) times, so the chain stays
+    at 2 rounds (the measured sweet spot: job-launch savings beat the
+    single recompute level).
     """
-    check_every = max(1, min(int(check_every), 3))
     edges = pairs.select(
         F.col(id_a).cast("long").alias("src"),
         F.col(id_b).cast("long").alias("dst"),
@@ -254,54 +253,40 @@ def connected_components(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
 
-    # r7 bounded fast path: (node, min-reachable-id) is ALGORITHM-
-    # INDEPENDENT, so when the (already-materialized) edge table fits
-    # the driver bound, collect it and run union-find — one collect +
-    # one createDataFrame instead of O(log diameter) join-round jobs,
-    # whose launch overhead dominates on all but huge graphs. Same
-    # auto-fallback discipline as the committed-keys broadcast: above
-    # ``max_driver_edges`` (2M symmetric rows ≈ 32 MB of longs) the
-    # distributed rounds below run unchanged. count() reads the
-    # checkpoint's block metadata — it does not recompute the pairs.
-    if max_driver_edges and sym.count() <= 2 * int(max_driver_edges):
-        pdf = sym.toPandas()  # Arrow when enabled; never Row objects
-        # NULL endpoints are not orderable on the driver — let the
-        # distributed rounds handle them exactly as before (r7 review)
-        if not (pdf["src"].isna().any() or pdf["dst"].isna().any()):
-            parent: dict = {}
+    # bounded fast path: (node, min-reachable-id) is ALGORITHM-
+    # INDEPENDENT, so when the (already-materialized) edge table is
+    # small, collect it and run union-find — one collect + one
+    # createDataFrame instead of O(log diameter) join-round jobs, whose
+    # launch overhead dominates on all but huge graphs. Larger graphs
+    # and NULL endpoints take the distributed rounds below.
+    pdf = collect_if_small(sym, non_null=("src", "dst"))
+    if pdf is not None:
+        parent: dict = {}
 
-            def find(x: int) -> int:
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
+        def find(x: int) -> int:
+            r = x
+            while parent[r] != r:
+                r = parent[r]
+            while parent[x] != r:  # path compression
+                parent[x], x = r, parent[x]
+            return r
 
-            for s, d in zip(pdf["src"], pdf["dst"]):
-                s, d = int(s), int(d)
-                if s not in parent:
-                    parent[s] = s
-                if d not in parent:
-                    parent[d] = d
-                rs, rd = find(s), find(d)
-                if rs != rd:  # union by min label: root = smaller id
-                    if rs < rd:
-                        parent[rd] = rs
-                    else:
-                        parent[rs] = rd
-            out = [(n, find(n)) for n in parent]
-            return pairs.sparkSession.createDataFrame(
-                out, "node long, comp long"
-            )
+        for s, d in zip(pdf["src"], pdf["dst"]):
+            s, d = int(s), int(d)
+            if s not in parent:
+                parent[s] = s
+            if d not in parent:
+                parent[d] = d
+            rs, rd = find(s), find(d)
+            if rs != rd:  # union by min label: root = smaller id
+                if rs < rd:
+                    parent[rd] = rs
+                else:
+                    parent[rs] = rd
+        out = [(n, find(n)) for n in parent]
+        return pairs.sparkSession.createDataFrame(out, "node long, comp long")
 
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-
-    for it in range(max_iterations):
+    def hash_min_round(labels: DataFrame) -> DataFrame:
         # hash-min step: candidate label for dst = min neighbor comp
         neighbor = (
             sym.join(labels, sym.src == labels.node)
@@ -323,7 +308,7 @@ def connected_components(
         l2 = stepped.select(
             F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
         )
-        new_labels = stepped.join(l2, stepped.comp == l2.jnode, "left").select(
+        return stepped.join(l2, stepped.comp == l2.jnode, "left").select(
             "node",
             F.coalesce(F.col("jcomp"), F.col("comp")).alias("comp"),
             F.greatest(
@@ -332,17 +317,21 @@ def connected_components(
                 .cast("int"),
             ).alias("changed"),
         )
-        if (it + 1) % check_every == 0 or it == max_iterations - 1:
-            new_labels = new_labels.localCheckpoint(eager=False)
-            # one action materializes the whole chained batch; 'changed'
-            # counts only the LAST round — 0 there means fixpoint
-            changed = new_labels.agg(F.sum("changed")).collect()[0][0] or 0
-            labels = new_labels.select("node", "comp")
-            if changed == 0:
-                break
-        else:
-            labels = new_labels.select("node", "comp")
-    return labels
+
+    labels = (
+        sym.select(F.col("src").alias("node"))
+        .distinct()
+        .withColumn("comp", F.col("node"))
+    )
+    while True:
+        chained = hash_min_round(
+            hash_min_round(labels).select("node", "comp")
+        ).localCheckpoint(eager=False)
+        labels = chained.select("node", "comp")
+        # one action materializes both chained rounds; 'changed' counts
+        # only the LAST round — 0 there means fixpoint
+        if not chained.agg(F.sum("changed")).collect()[0][0]:
+            return labels
 
 
 def dedup_corpus(

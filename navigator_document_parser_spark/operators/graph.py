@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from navigator_document_parser_spark.operators import collect_if_small
+
 
 def pagerank(
     edges: DataFrame,
@@ -123,7 +125,6 @@ def hits(
     dst: str = "dst_host",
     weight: str | None = "n_links",
     iterations: int = 5,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) -> (node, authority, hub).
 
@@ -137,19 +138,14 @@ def hits(
     them per iteration the un-truncated plan grows ~4^t — Catalyst
     analysis time explodes long before execution does (measured: 5
     iterations un-analyzable in minutes; this shape runs in seconds).
-    Magnitudes grow like (total edge weight)^(2t) between barriers —
-    fine in doubles for the handful of iterations HITS needs on any
-    realistic host graph. For long runs or extreme weights, set
-    checkpoint_every>0: each barrier materializes the scores AND
-    L1-rescales them (a uniform scalar, result direction unchanged), so
-    both lineage depth and magnitude are bounded. The rescale's
-    double-reference is safe there because it reads the just-written
-    checkpoint blocks, not the un-truncated subtree.
+    Magnitudes grow like (total edge weight)^(2t) — fine in doubles
+    for the handful of iterations HITS needs on any realistic host
+    graph.
 
     Scale: two shuffles per iteration (hash agg on dst, then on src),
     map-side combine on both; no driver collects or counts anywhere.
-    checkpoint_every=0 (default) runs the whole power iteration as ONE
-    linear DAG — right for the handful of iterations HITS needs.
+    The whole power iteration is ONE linear DAG — right for the
+    handful of iterations HITS needs.
     """
     if iterations <= 0:
         raise ValueError("iterations must be positive")
@@ -169,9 +165,8 @@ def hits(
     )
 
     def _l1(df: DataFrame, col: str) -> DataFrame:
-        # embeds df twice (scores + 1-row norm): call ONLY on a
-        # materialized checkpoint or once at the very end — inside the
-        # loop on raw lineage this doubling compounds to ~4^t
+        # embeds df twice (scores + 1-row norm): call once at the very
+        # end — inside the loop this doubling compounds to ~4^t
         norm = df.agg(
             F.coalesce(F.sum(col), F.lit(0.0)).alias("_norm")
         )
@@ -187,7 +182,7 @@ def hits(
     # action (empty input degrades to an empty result naturally)
     hubs = nodes.select("node", F.lit(1.0).alias("hub"))
     auths = None
-    for i in range(int(iterations)):
+    for _ in range(int(iterations)):
         auths = (
             nodes.join(
                 e.join(hubs.withColumnRenamed("node", "src"), "src")
@@ -208,16 +203,6 @@ def hits(
             )
             .select("node", F.coalesce("h", F.lit(0.0)).alias("hub"))
         )
-        if (
-            checkpoint_every
-            and (i + 1) % int(checkpoint_every) == 0
-            and i + 1 < iterations
-        ):
-            # materialize, THEN rescale reading the checkpoint blocks:
-            # bounds lineage depth AND score magnitude at each barrier
-            # (the L1 factor is uniform, so results are unchanged)
-            auths = _l1(auths.localCheckpoint(eager=True), "authority")
-            hubs = _l1(hubs.localCheckpoint(eager=True), "hub")
 
     return _l1(auths, "authority").join(_l1(hubs, "hub"), "node").select(
         "node", "authority", "hub"
@@ -272,7 +257,6 @@ def label_propagation(
     src: str = "src_host",
     dst: str = "dst_host",
     checkpoint_every: int = 3,
-    max_driver_edges: int = 2_000_000,
 ) -> DataFrame:
     """Synchronous min-label propagation over the UNDIRECTED host graph
     — the cheap community detector crawl pipelines use to group hosts
@@ -296,35 +280,32 @@ def label_propagation(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # r7 bounded fast path (the connected_components discipline): the
+    # bounded fast path (the connected_components discipline): the
     # fixed-round synchronous min-label recurrence is exact string
     # arithmetic — replay it on the driver when the materialized edge
-    # table fits max_driver_edges, one collect + one createDataFrame
-    # instead of one join-round job per iteration. Spark's string min
-    # and Python's str min agree (both codepoint order). Distributed
-    # rounds below run unchanged above the bound.
-    if max_driver_edges and sym.count() <= int(max_driver_edges):
-        pdf = sym.toPandas()  # Arrow when enabled; never Row objects
-        # NULL endpoints are not orderable on the driver — leave them
-        # to the distributed rounds (r7 review)
-        if not (pdf["a"].isna().any() or pdf["b"].isna().any()):
-            node_t = sym.schema["a"].dataType.simpleString()
-            adj: dict = {}
-            for a, b in zip(pdf["a"], pdf["b"]):
-                adj.setdefault(a, []).append(b)
-            labels_d = {v: v for v in adj}
-            for _ in range(int(iterations)):
-                labels_d = {
-                    v: min(
-                        labels_d[v],
-                        min(labels_d[u] for u in nbrs),
-                    )
-                    for v, nbrs in adj.items()
-                }
-            return edges.sparkSession.createDataFrame(
-                list(labels_d.items()),
-                f"node {node_t}, community {node_t}",
-            )
+    # table is small, one collect + one createDataFrame instead of one
+    # join-round job per iteration. Spark's string min and Python's str
+    # min agree (both codepoint order). Larger graphs and NULL
+    # endpoints take the distributed rounds below.
+    pdf = collect_if_small(sym, non_null=("a", "b"))
+    if pdf is not None:
+        node_t = sym.schema["a"].dataType.simpleString()
+        adj: dict = {}
+        for a, b in zip(pdf["a"], pdf["b"]):
+            adj.setdefault(a, []).append(b)
+        labels_d = {v: v for v in adj}
+        for _ in range(int(iterations)):
+            labels_d = {
+                v: min(
+                    labels_d[v],
+                    min(labels_d[u] for u in nbrs),
+                )
+                for v, nbrs in adj.items()
+            }
+        return edges.sparkSession.createDataFrame(
+            list(labels_d.items()),
+            f"node {node_t}, community {node_t}",
+        )
     labels = sym.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -392,7 +373,6 @@ def bfs_depth(
     src: str = "src_host",
     dst: str = "dst_host",
     checkpoint_every: int = 3,
-    max_driver_edges: int = 2_000_000,
 ) -> DataFrame:
     """Multi-source BFS over the DIRECTED link graph: crawl depth from
     a seed list — the frontier-discovery question every crawl planner
@@ -426,37 +406,36 @@ def bfs_depth(
         .distinct()
     )
     seed_set = sorted(set(seeds))
-    # r7 bounded fast path: the fixed-round relaxation is exact
-    # integer arithmetic — replay on the driver under max_driver_edges
-    # (connected_components discipline), distributed rounds unchanged
-    # above it.
-    if max_driver_edges and sym.count() <= int(max_driver_edges):
-        pdf = sym.toPandas()  # Arrow when enabled; never Row objects
-        if not (pdf["a"].isna().any() or pdf["b"].isna().any()):
-            node_t = sym.schema["a"].dataType.simpleString()
-            preds: dict = {}
-            all_nodes: set = set()
-            for a, b in zip(pdf["a"], pdf["b"]):
-                preds.setdefault(b, []).append(a)
-                all_nodes.add(a)
-                all_nodes.add(b)
-            ss = set(seed_set)
+    # bounded fast path: the fixed-round relaxation is exact integer
+    # arithmetic — replay it on the driver when the edge table is small
+    # (connected_components discipline); larger graphs and NULL
+    # endpoints take the distributed rounds below.
+    pdf = collect_if_small(sym, non_null=("a", "b"))
+    if pdf is not None:
+        node_t = sym.schema["a"].dataType.simpleString()
+        preds: dict = {}
+        all_nodes: set = set()
+        for a, b in zip(pdf["a"], pdf["b"]):
+            preds.setdefault(b, []).append(a)
+            all_nodes.add(a)
+            all_nodes.add(b)
+        ss = set(seed_set)
+        dist = {
+            v: (0 if v in ss else _UNREACHED) for v in all_nodes
+        }
+        for _ in range(int(rounds)):
             dist = {
-                v: (0 if v in ss else _UNREACHED) for v in all_nodes
+                v: (
+                    min(d, min(dist[u] + 1 for u in preds[v]))
+                    if v in preds
+                    else d
+                )
+                for v, d in dist.items()
             }
-            for _ in range(int(rounds)):
-                dist = {
-                    v: (
-                        min(d, min(dist[u] + 1 for u in preds[v]))
-                        if v in preds
-                        else d
-                    )
-                    for v, d in dist.items()
-                }
-            return edges.sparkSession.createDataFrame(
-                [(v, d) for v, d in dist.items() if d < _UNREACHED],
-                f"host {node_t}, depth bigint",
-            )
+        return edges.sparkSession.createDataFrame(
+            [(v, d) for v, d in dist.items() if d < _UNREACHED],
+            f"host {node_t}, depth bigint",
+        )
     labels = nodes.select(
         "node",
         F.when(F.col("node").isin(seed_set), F.lit(0))
@@ -547,7 +526,6 @@ def k_core(
     src: str = "src_host",
     dst: str = "dst_host",
     checkpoint_every: int = 3,
-    max_driver_edges: int = 2_000_000,
 ) -> DataFrame:
     """Bounded k-core decomposition of the UNDIRECTED host graph:
     repeatedly peel nodes of degree < k. The k-core is the standard
@@ -589,16 +567,11 @@ def k_core(
         )
         .localCheckpoint(eager=True)  # re-read every round, two branches
     )
-    # r7 bounded fast path: the fixed-round peel is exact integer
-    # arithmetic — replay on the driver under max_driver_edges
-    # (connected_components discipline), distributed rounds unchanged
-    # above it.
-    if max_driver_edges and sym.count() <= int(max_driver_edges):
-        pdf = sym.toPandas()  # Arrow when enabled; never Row objects
-        if pdf["a"].isna().any() or pdf["b"].isna().any():
-            pdf = None  # NULLs: fall through to distributed (r7 review)
-    else:
-        pdf = None
+    # bounded fast path: the fixed-round peel is exact integer
+    # arithmetic — replay it on the driver when the edge table is small
+    # (connected_components discipline); larger graphs and NULL
+    # endpoints take the distributed rounds below.
+    pdf = collect_if_small(sym, non_null=("a", "b"))
     if pdf is not None:
         node_t = sym.schema["a"].dataType.simpleString()
         adj: dict = {}

@@ -857,7 +857,7 @@ def boolean_search(
         )
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("sum_tf").desc(), F.col("doc_id").asc()
+        F.col("sum_tf").desc(), F.col("doc_id").asc_nulls_last()
     )
     return (
         cand.withColumn("rank", F.row_number().over(w).cast("bigint"))
@@ -1022,7 +1022,7 @@ def hybrid_search_rrf(
         )
     )
     wd = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("doc_id").asc()
+        F.col("sim").desc(), F.col("doc_id").asc_nulls_last()
     )
     dense = (
         vecs.crossJoin(F.broadcast(qdf))
@@ -1040,7 +1040,7 @@ def hybrid_search_rrf(
         ).alias("rrf"),
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf").desc(), F.col("doc_id").asc()
+        F.col("rrf").desc(), F.col("doc_id").asc_nulls_last()
     )
     return (
         fused.withColumn("rank", F.row_number().over(w).cast("bigint"))
@@ -1315,7 +1315,7 @@ def search_eval(
     )
 
     jw = Window.partitionBy("query_id").orderBy(
-        F.col("rel").desc(), F.col("doc_id").asc()
+        F.col("rel").desc(), F.col("doc_id").asc_nulls_last()
     )
     judged = rels.withColumn(
         "irank", F.row_number().over(jw)

@@ -9,14 +9,23 @@ them 1:1.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from navigator_document_parser_spark.operators import ratio4, ratio4_sql
+from navigator_document_parser_spark.operators import (
+    collect_if_small,
+    ratio4,
+    ratio4_sql,
+)
 
 # small portable punctuation class (identical semantics in Spark + DuckDB
 # regex; deliberately NOT \p{Punct}, whose membership differs by engine)
 PUNCT_CLASS = "[.,;:!?]"
+
+_WS_RE = re.compile(r"\s+")
 
 
 def token_count(col: Column) -> Column:
@@ -89,6 +98,31 @@ def fingerprint(col: Column) -> Column:
     return F.md5(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")))
 
 
+def _winnow_one(text: str, k: int, w: int) -> list[int]:
+    """Winnowing selection of one text: md5-prefix hashes of its
+    k-grams (lowered, whitespace collapsed), the min of each window of
+    w, distinct in first-selection order."""
+    t = _WS_RE.sub(" ", (text or "").lower()).strip()
+    n = len(t) - k + 1
+    if n < 1:
+        return []
+    grams = [
+        int(hashlib.md5(t[i : i + k].encode("utf-8")).hexdigest()[:8], 16)
+        for i in range(n)
+    ]
+    n_win = n - w + 1
+    if n_win < 1:
+        return []
+    seen: set[int] = set()
+    out: list[int] = []
+    for j in range(n_win):
+        m = min(grams[j : j + w])
+        if m not in seen:
+            seen.add(m)
+            out.append(m)
+    return out
+
+
 def winnow_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -109,40 +143,15 @@ def winnow_fingerprints(
     # expression per window after CollapseProject -> O(n^2) md5 per row
     # (measured: did not finish at 500 docs). The Python loop is O(n)
     # and uses the same md5 math, so the SQL oracle still reproduces it.
-    import hashlib
-    import re as _re
     from typing import Iterator
 
     import pandas as pd
-
-    ws_re = _re.compile(r"\s+")
-
-    def winnow_one(text: str) -> list[int]:
-        t = ws_re.sub(" ", (text or "").lower()).strip()
-        n = len(t) - k + 1
-        if n < 1:
-            return []
-        grams = [
-            int(hashlib.md5(t[i : i + k].encode("utf-8")).hexdigest()[:8], 16)
-            for i in range(n)
-        ]
-        n_win = n - w + 1
-        if n_win < 1:
-            return []
-        seen: set[int] = set()
-        out: list[int] = []
-        for j in range(n_win):
-            m = min(grams[j : j + w])
-            if m not in seen:
-                seen.add(m)
-                out.append(m)
-        return out
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, fps = [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                for fp in winnow_one(text):
+                for fp in _winnow_one(text, k, w):
                     ids.append(doc_id)
                     fps.append(fp)
             yield pd.DataFrame({"id": pd.Series(ids, dtype="int64"),
@@ -161,43 +170,18 @@ def _winnow_sets(
     w: int,
 ) -> DataFrame:
     """winnow_fingerprints folded per doc: one row (id, fpa, n_fp) per
-    document with >= 1 selected fingerprint — the same winnow_one math,
+    document with >= 1 selected fingerprint — the same _winnow_one math,
     emitted as arrays so winnow_pairs never pays the 5M-row explode +
     groupBy round-trip just to fold them back."""
-    import hashlib
-    import re
     from typing import Iterator
 
     import pandas as pd
-
-    ws_re = re.compile(r"\s+")
-
-    def winnow_one(text: str) -> list[int]:
-        t = ws_re.sub(" ", (text or "").lower()).strip()
-        n = len(t) - k + 1
-        if n < 1:
-            return []
-        grams = [
-            int(hashlib.md5(t[i : i + k].encode("utf-8")).hexdigest()[:8], 16)
-            for i in range(n)
-        ]
-        n_win = n - w + 1
-        if n_win < 1:
-            return []
-        seen: set[int] = set()
-        out: list[int] = []
-        for j in range(n_win):
-            m = min(grams[j : j + w])
-            if m not in seen:
-                seen.add(m)
-                out.append(m)
-        return out
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, arrs, lens = [], [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                lst = winnow_one(text)
+                lst = _winnow_one(text, k, w)
                 if lst:
                     ids.append(doc_id)
                     arrs.append(lst)
@@ -3038,7 +3022,6 @@ def gibberish_score(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_collect_tris: int = 1 << 20,
 ) -> DataFrame:
     """Character-trigram LM score per document — the gibberish /
     keyboard-mash / encoding-garbage detector that catches what the
@@ -3056,9 +3039,9 @@ def gibberish_score(
     100 TB shape: one trigram explode -> hash aggregate builds the
     alphabet-bounded corpus dictionary (map-side combine absorbs hot
     trigrams); per-doc sums are ONE vectorized Arrow pass over the
-    lowered text against the collected (bounded, auto-fallback to the
-    broadcast-join shape above ``max_collect_tris``) dictionary — no
-    per-occurrence rows ever shuffle or materialize.
+    lowered text against the collected (bounded by collect_if_small,
+    the broadcast-join shape above it) dictionary — no per-occurrence
+    rows ever shuffle or materialize.
 
     Returns (doc_id, n_tris, score) — score is round()-free: the
     raw double is emitted (hash-stable because its inputs are exact).
@@ -3088,7 +3071,8 @@ def gibberish_score(
     id_type = lowered.schema["doc_id"].dataType.simpleString()
     # corpus counts: explode -> hash aggregate (map-side combine
     # absorbs hot trigrams); dictionary-sized output, checkpointed so
-    # the count() probe + collect below don't re-run the explode
+    # the size-gated collect and the fallback join don't re-run the
+    # explode
     corpus = (
         lowered.select(
             F.explode(
@@ -3120,11 +3104,10 @@ def gibberish_score(
     # UTF-32 char codes (21 bits each), searchsorted into the sorted
     # dictionary (every doc trigram IS in the corpus by construction),
     # integer contrib sums (exact under any order). Falls back to the
-    # old join shape if the dictionary exceeds max_collect_tris
-    # (committed-keys auto-fallback pattern).
-    if corpus.count() <= int(max_collect_tris):
-        rows = corpus.collect()
-        tt = sum(r["c"] for r in rows)  # exact BIGINT total
+    # old join shape if the dictionary is too large to collect.
+    dictionary = collect_if_small(corpus)
+    if dictionary is not None:
+        tt = int(dictionary["c"].sum())  # exact BIGINT total
         import numpy as _np
 
         def _code(t: str) -> int:
@@ -3133,7 +3116,10 @@ def gibberish_score(
             ).astype(_np.int64)
             return int((a[0] << 42) | (a[1] << 21) | a[2])
 
-        pairs = sorted((_code(r["t"]), r["contrib"]) for r in rows)
+        pairs = sorted(
+            (_code(t), int(c))
+            for t, c in zip(dictionary["t"], dictionary["contrib"])
+        )
         keys = _np.array([p[0] for p in pairs], dtype=_np.int64)
         vals = _np.array([p[1] for p in pairs], dtype=_np.int64)
 

@@ -64,17 +64,13 @@ def start_feed_frontier_stream(
     out_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ):
     """Tail ``input_dir`` for (feed, xml) parquet files; append
     never-seen feed entries to the frontier at ``out_dir``. Returns the
     started StreamingQuery."""
-    reader = spark.readStream.schema("feed string, xml string")
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(input_dir)
+    stream = spark.readStream.schema("feed string, xml string").parquet(
+        input_dir
+    )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

@@ -235,7 +235,6 @@ def start_index_maintenance_stream(
     block_size: int = 128,
     blocks_per_bucket: int = 16,
     available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ):
     """Tail ``input_dir`` for document parquet files and keep the
     committed index under ``index_dir`` current. Returns the started
@@ -248,12 +247,7 @@ def start_index_maintenance_stream(
             "before pointing this at s3a/hdfs (module docstring)"
         )
     os.makedirs(index_dir, exist_ok=True)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(input_dir)
+    stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_index_batch(

@@ -4,6 +4,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from navigator_document_parser_spark import operators
 from navigator_document_parser_spark.operators.dedup import (
     connected_components,
     dedup_corpus,
@@ -41,45 +42,61 @@ def _union_find(pairs):
     return out
 
 
-def test_components_match_union_find_random(spark):
+# the default bound admits these small graphs (driver replay); a zero
+# bound sends every non-empty frame to the distributed rounds
+_BOUNDS = (operators.DRIVER_MAX_ROWS, 0)
+
+
+def test_components_match_union_find_random(spark, monkeypatch):
     rng = random.Random(42)
     pairs = sorted({
         tuple(sorted(rng.sample(range(60), 2))) for _ in range(70)
     })
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     expected = _union_find(pairs)
-    # r7: both the bounded driver fast path (default) and the
-    # distributed label rounds (forced via max_driver_edges=0) must
+    # the union-find fast path and the distributed label rounds must
     # produce the identical min-label table
-    for mde in (2_000_000, 0):
+    for bound in _BOUNDS:
+        monkeypatch.setattr(operators, "DRIVER_MAX_ROWS", bound)
         got = {
             r["node"]: r["comp"]
-            for r in connected_components(
-                df, max_driver_edges=mde
-            ).collect()
+            for r in connected_components(df).collect()
         }
-        assert got == expected, f"max_driver_edges={mde}"
+        assert got == expected, f"DRIVER_MAX_ROWS={bound}"
 
 
-def test_components_long_chain(spark):
+def test_components_long_chain(spark, monkeypatch):
     # path graph 0-1-2-...-25: diameter stresses the iteration count
     pairs = [(i, i + 1) for i in range(25)]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    for mde in (2_000_000, 0):
+    for bound in _BOUNDS:
+        monkeypatch.setattr(operators, "DRIVER_MAX_ROWS", bound)
         got = {
             r["node"]: r["comp"]
-            for r in connected_components(
-                df, max_driver_edges=mde
-            ).collect()
+            for r in connected_components(df).collect()
         }
-        assert got == {i: 0 for i in range(26)}, f"max_driver_edges={mde}"
+        assert got == {i: 0 for i in range(26)}, f"DRIVER_MAX_ROWS={bound}"
 
 
-def test_graph_driver_fast_paths_match_distributed(spark):
-    # r7: label_propagation / bfs_depth / k_core grew the same bounded
-    # driver fast path as connected_components. Pin fast == distributed
-    # (max_driver_edges=0 forces the join-round shape) on a random
-    # directed multigraph with self-loops and asymmetric edges.
+def test_components_null_endpoint_reaches_fixpoint(spark):
+    # a NULL endpoint skips the driver replay; the distributed rounds,
+    # which run until nothing changes, must still stop: NULL never
+    # joins, so it neither takes nor gives a label
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, None), (5, 6)], "id_a long, id_b long"
+    )
+    got = {
+        r["node"]: r["comp"] for r in connected_components(df).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, None: None}
+
+
+def test_graph_driver_fast_paths_match_distributed(spark, monkeypatch):
+    # label_propagation / bfs_depth / k_core replay their fixed rounds
+    # on the driver when the edge table is small. Pin fast ==
+    # distributed (a zero DRIVER_MAX_ROWS forces the join-round shape)
+    # on a random directed multigraph with self-loops and asymmetric
+    # edges.
     from navigator_document_parser_spark.operators.graph import (
         bfs_depth,
         k_core,
@@ -96,16 +113,32 @@ def test_graph_driver_fast_paths_match_distributed(spark):
     def rows(d):
         return sorted(tuple(r) for r in d.collect())
 
-    assert rows(label_propagation(df, iterations=3)) == rows(
-        label_propagation(df, iterations=3, max_driver_edges=0)
-    )
     seeds = ["h0", "h13"]
-    assert rows(bfs_depth(df, seeds, rounds=3)) == rows(
-        bfs_depth(df, seeds, rounds=3, max_driver_edges=0)
+    fast = [
+        rows(label_propagation(df, iterations=3)),
+        rows(bfs_depth(df, seeds, rounds=3)),
+        rows(k_core(df, k=2, rounds=3)),
+    ]
+    monkeypatch.setattr(operators, "DRIVER_MAX_ROWS", 0)
+    assert rows(label_propagation(df, iterations=3)) == fast[0]
+    assert rows(bfs_depth(df, seeds, rounds=3)) == fast[1]
+    assert rows(k_core(df, k=2, rounds=3)) == fast[2]
+
+
+def test_collect_if_small_gates_on_size_and_nulls(spark, monkeypatch):
+    from navigator_document_parser_spark.operators import collect_if_small
+
+    df = spark.createDataFrame(
+        [(1, 2), (2, None), (3, 4)], "src long, dst long"
     )
-    assert rows(k_core(df, k=2, rounds=3)) == rows(
-        k_core(df, k=2, rounds=3, max_driver_edges=0)
-    )
+    assert len(collect_if_small(df)) == 3
+    assert len(collect_if_small(df, non_null=("src",))) == 3
+    # a NULL in a named column sends the caller to its distributed path
+    assert collect_if_small(df, non_null=("src", "dst")) is None
+    monkeypatch.setattr(operators, "DRIVER_MAX_ROWS", 3)
+    assert len(collect_if_small(df)) == 3  # at the bound: collected
+    monkeypatch.setattr(operators, "DRIVER_MAX_ROWS", 2)
+    assert collect_if_small(df) is None  # one row over: not collected
 
 
 def test_dedup_corpus_keeps_one_per_cluster(spark):

@@ -38,8 +38,9 @@ def _land(spark, in_dir, rows):
 
 
 def _drain(spark, in_dir, out_dir, ckpt):
-    q = start_feed_frontier_stream(
-        spark, in_dir, out_dir, ckpt, max_files_per_trigger=1)
+    """Process every landed file not yet in the checkpoint, then stop.
+    Landing one file per drain gives one file per micro-batch."""
+    q = start_feed_frontier_stream(spark, in_dir, out_dir, ckpt)
     q.awaitTermination(120)
 
 
@@ -47,6 +48,7 @@ def test_feed_frontier_discovers_each_url_once(spark, dirs):
     in_dir, out_dir, ckpt = dirs
     # poll 1: entries 0-4; poll 2 (separate file): 3-7 overlap + new
     _land(spark, in_dir, [("f1", _rss("f1", range(5)))])
+    _drain(spark, in_dir, out_dir, ckpt)
     _land(spark, in_dir, [("f1", _rss("f1", range(3, 8))),
                           ("f2", _rss("f2", [0]))])
     _drain(spark, in_dir, out_dir, ckpt)

@@ -63,21 +63,6 @@ def test_hits_empty_edges(spark):
     assert hits(df, iterations=2).collect() == []
 
 
-def test_checkpoint_rescale_matches_default(spark):
-    df = spark.createDataFrame(
-        EDGES, "src_host string, dst_host string, n_links int"
-    )
-    base = {
-        r["node"]: (round(r["authority"], 10), round(r["hub"], 10))
-        for r in hits(df, iterations=5).collect()
-    }
-    ck = {
-        r["node"]: (round(r["authority"], 10), round(r["hub"], 10))
-        for r in hits(df, iterations=5, checkpoint_every=2).collect()
-    }
-    assert base == ck
-
-
 def test_rejects_nonpositive_iterations(spark):
     import pytest as _pytest
 

@@ -1,6 +1,7 @@
 """Streaming index maintenance == batch full rebuild (stream parity).
 
-Drains a file stream in per-file micro-batches through
+Drains a file stream in per-file micro-batches (one file landed per
+availableNow drain, same checkpoint) through
 streaming/index_stream.py and compares the committed generation
 against index_export over the union — including a second run whose
 delta RE-CRAWLS existing ids (changed text must replace old postings,
@@ -40,10 +41,11 @@ def dirs():
     shutil.rmtree(base, ignore_errors=True)
 
 
-def _drain(spark, in_dir, index_dir, ckpt):
+def _drain(spark, in_dir, index_dir, ckpt, **kw):
+    """Process every landed file not yet in the checkpoint, then stop."""
+    opts = {"n_shards": 4, "block_size": 8, **kw}
     q = start_index_maintenance_stream(
-        spark, in_dir, index_dir, ckpt,
-        n_shards=4, block_size=8, max_files_per_trigger=1,
+        spark, in_dir, index_dir, ckpt, **opts
     )
     q.awaitTermination(120)
 
@@ -55,9 +57,9 @@ def test_index_stream_matches_batch_rebuild(spark, dirs):
         [(i, f"gamma delta doc{i} common") for i in range(10, 20)],
         [(i, f"epsilon doc{i} common") for i in range(20, 30)],
     ]
-    for rows in batches:
+    for rows in batches:  # one file per micro-batch
         _write_docs(spark, in_dir, rows)
-    _drain(spark, in_dir, index_dir, ckpt)
+        _drain(spark, in_dir, index_dir, ckpt)
 
     committed = read_current_index(spark, index_dir)
     assert committed is not None
@@ -117,14 +119,11 @@ def test_index_stream_inherits_untouched_buckets(spark, dirs):
     )
 
     in_dir, index_dir, ckpt = dirs
+    small = {"n_shards": 2, "block_size": 4, "blocks_per_bucket": 1}
     _write_docs(spark, in_dir, [(i, f"aa bb doc{i}") for i in range(8)])
+    _drain(spark, in_dir, index_dir, ckpt, **small)
     _write_docs(spark, in_dir, [(i, f"cc doc{i}") for i in range(8, 12)])
-    q = start_index_maintenance_stream(
-        spark, in_dir, index_dir, ckpt,
-        n_shards=2, block_size=4, blocks_per_bucket=1,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
+    _drain(spark, in_dir, index_dir, ckpt, **small)
 
     manifest = _read_manifest(index_dir)
     # batch 0 wrote buckets 0 (docs 0-3) and 1 (docs 4-7); batch 1
@@ -154,17 +153,13 @@ def test_index_stream_purged_bucket_leaves_manifest(spark, dirs):
     )
 
     in_dir, index_dir, ckpt = dirs
+    small = {"n_shards": 2, "block_size": 4, "blocks_per_bucket": 1}
     _write_docs(spark, in_dir, [(i, f"xx doc{i}") for i in range(8)])
-    _drain_k = lambda: start_index_maintenance_stream(  # noqa: E731
-        spark, in_dir, index_dir, ckpt,
-        n_shards=2, block_size=4, blocks_per_bucket=1,
-        max_files_per_trigger=1,
-    ).awaitTermination(120)
-    _drain_k()
+    _drain(spark, in_dir, index_dir, ckpt, **small)
     assert set(_read_manifest(index_dir)) == {"0", "1"}
 
     _write_docs(spark, in_dir, [(i, "") for i in range(4)])  # empty re-crawl
-    _drain_k()
+    _drain(spark, in_dir, index_dir, ckpt, **small)
     manifest = _read_manifest(index_dir)
     assert set(manifest) == {"1"}  # bucket 0 fully purged
     committed = read_current_index(spark, index_dir)
@@ -186,14 +181,11 @@ def test_index_stream_vacuum_and_uri_guard(spark, dirs):
     )
 
     in_dir, index_dir, ckpt = dirs
+    small = {"n_shards": 2, "block_size": 4, "blocks_per_bucket": 1}
     _write_docs(spark, in_dir, [(i, f"vv doc{i}") for i in range(4)])
+    _drain(spark, in_dir, index_dir, ckpt, **small)
     _write_docs(spark, in_dir, [(i, f"ww doc{i}") for i in range(4)])
-    q = start_index_maintenance_stream(
-        spark, in_dir, index_dir, ckpt,
-        n_shards=2, block_size=4, blocks_per_bucket=1,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
+    _drain(spark, in_dir, index_dir, ckpt, **small)
     before = read_current_index(spark, index_dir)
     want = _canon(before)
 

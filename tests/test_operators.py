@@ -1017,12 +1017,20 @@ def test_keyword_search_topk_and_tiebreak(spark):
 def test_search_null_doc_id_matches_oracles(spark):
     """A NULL doc_id row is no document: it must not add to any term's
     document frequency (the oracles count DISTINCT doc_id), and where it
-    ties on score it ranks after every real doc_id, as in DuckDB."""
+    ties on score it ranks after every real doc_id, as in DuckDB. Covers
+    every ranking with a doc_id tie-break: keyword, bm25, boolean,
+    hybrid RRF and search_eval's ideal ranking."""
     from navigator_document_parser_spark.operators.search import (
         bm25_search,
+        boolean_search,
+        hybrid_search_rrf,
         keyword_search,
         oracle_bm25_search,
+        oracle_boolean_search,
+        oracle_hybrid_search_rrf,
         oracle_keyword_search,
+        oracle_search_eval,
+        search_eval,
     )
 
     rows = [
@@ -1052,6 +1060,52 @@ def test_search_null_doc_id_matches_oracles(spark):
         con.sql(oracle_bm25_search(queries, k=10)).df(),
         ["query_id", "rank"],
         float_cols=("score",),
+    )
+    # "hash" ties at tf 1 in docs 1, 2 and the NULL row: the NULL row
+    # ranks last, as in the oracle
+    bool_queries = [(1, ["hash"], [], []), (2, [], ["join"], ["filter"])]
+    compare(
+        boolean_search(df, bool_queries, k=10),
+        con.sql(oracle_boolean_search(bool_queries, k=10)).df(),
+        ["query_id", "rank"],
+    )
+    compare(
+        hybrid_search_rrf(df, queries, k=10, k_cand=10),
+        con.sql(oracle_hybrid_search_rrf(queries, k=10, k_cand=10)).df(),
+        ["query_id", "rank"],
+        float_cols=("rrf",),
+    )
+    # a NULL judged doc ties on rel with a real one in the ideal ranking
+    hits = [(1, 1, 1), (1, None, 2), (1, 2, 3), (2, 4, 1)]
+    rels = [(1, 2, 2), (1, None, 2), (1, 1, 1), (2, 3, 1)]
+    for name, rows_, cols in (
+        ("hits_t", hits, "query_id, doc_id, rank"),
+        ("rels_t", rels, "query_id, doc_id, rel"),
+    ):
+        con.execute(
+            f"CREATE TABLE {name} AS SELECT * FROM (VALUES "
+            + ", ".join(
+                "(" + ", ".join("NULL" if v is None else str(v) for v in r)
+                + ")"
+                for r in rows_
+            )
+            + f") t({cols})"
+        )
+    compare(
+        search_eval(
+            spark.createDataFrame(
+                hits, "query_id bigint, doc_id bigint, rank int"
+            ),
+            spark.createDataFrame(
+                rels, "query_id bigint, doc_id bigint, rel int"
+            ),
+            k=3,
+        ),
+        con.sql(oracle_search_eval(
+            "SELECT * FROM hits_t", "SELECT * FROM rels_t", k=3
+        )).df(),
+        ["query_id"],
+        float_cols=("ndcg3", "mrr3"),
     )
 
 

@@ -640,11 +640,12 @@ def test_gibberish_score_orders_natural_above_mash(spark):
     assert out[1].n_tris == len("the cat and the hat and the bat") - 2
 
 
-def test_gibberish_score_fallback_matches_vectorized(spark):
-    # r7 rewrite: the per-doc sums come from a vectorized Arrow pass
-    # against the collected trigram dictionary; max_collect_tris=0
-    # forces the old broadcast-join shape. Same rows bit-for-bit —
-    # including non-ASCII text (UTF-32 code packing vs substring).
+def test_gibberish_score_fallback_matches_vectorized(spark, monkeypatch):
+    # the per-doc sums come from a vectorized Arrow pass against the
+    # collected trigram dictionary; a zero DRIVER_MAX_ROWS forces the
+    # broadcast-join shape. Same rows bit-for-bit — including
+    # non-ASCII text (UTF-32 code packing vs substring).
+    from navigator_document_parser_spark import operators
     from navigator_document_parser_spark.operators.text import (
         gibberish_score,
     )
@@ -657,7 +658,8 @@ def test_gibberish_score_fallback_matches_vectorized(spark):
     ]
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     fast = _rows(gibberish_score(df))
-    slow = _rows(gibberish_score(df, max_collect_tris=0))
+    monkeypatch.setattr(operators, "DRIVER_MAX_ROWS", 0)
+    slow = _rows(gibberish_score(df))
     assert set(fast) == set(slow)
     for k in fast:
         assert fast[k].n_tris == slow[k].n_tris
