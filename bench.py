@@ -7,7 +7,10 @@ testdata tables.
 
 Env:
   SPARK_GRAFT_SF_DIR  (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    (default 32)
+  SPARK_GRAFT_CPUS    (default: the CPUs this process may run on)
+
+Driver memory is a quarter of physical RAM, between 1 and 8 GiB
+(perfbench.session.driver_memory_mb).
 """
 
 from __future__ import annotations
@@ -300,7 +303,9 @@ def main():
 
 def _run_part(mode: str):
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from perfbench.session import cpu_count, driver_memory_mb
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or cpu_count())
     m = re.search(r"sf([\d.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.1
 
@@ -317,10 +322,10 @@ def _run_part(mode: str):
             # small split size keeps every core busy instead of letting
             # file bin-packing collapse the corpus into a few fat tasks
             "spark.sql.files.maxPartitionBytes": str(4 * 1024 * 1024),
-            # the 8g default thrashes GC once the 3x20k-doc extraction
-            # runs have churned the heap, distorting late-suite queries
-            # by 2-5x (measured); the box has 128 GiB
-            "spark.driver.memory": "24g",
+            # sized from the machine: a fixed large heap does not fit a
+            # small box, and a small one thrashes GC once the 3x20k-doc
+            # extraction runs have churned it
+            "spark.driver.memory": f"{driver_memory_mb()}m",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")

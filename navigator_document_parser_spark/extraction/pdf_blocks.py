@@ -29,6 +29,9 @@ from dataclasses import dataclass, field
 
 DEFAULT_PAGE_W = 612.0
 DEFAULT_PAGE_H = 792.0
+# Bound on one inflated /FlateDecode stream: a Flate bomb (kilobytes that
+# inflate to gigabytes) becomes an error row instead of a worker OOM.
+MAX_INFLATED_BYTES = 32 << 20
 
 
 @dataclass
@@ -273,11 +276,29 @@ def _parse_content_stream(data: str) -> list[_Show]:
     return shows
 
 
+def _inflate(raw: bytes) -> bytes | None:
+    """Inflate one /FlateDecode stream. None when it is corrupt or
+    truncated (the page skips it); ValueError when it inflates past
+    MAX_INFLATED_BYTES."""
+    d = zlib.decompressobj()
+    try:
+        out = d.decompress(raw, MAX_INFLATED_BYTES + 1)
+    except zlib.error:
+        return None
+    if len(out) > MAX_INFLATED_BYTES:
+        raise ValueError(
+            f"flate stream inflates past {MAX_INFLATED_BYTES} bytes"
+        )
+    return out if d.eof else None
+
+
 def extract_pdf(data: bytes) -> PdfExtraction:
     """Parse PDF bytes into reading-ordered text blocks with spans.
 
-    Never raises: unparseable input yields an extraction with zero blocks
-    (md5 still computed — M9 parity, cli/parse_pdfs.py:190-195).
+    Unparseable input yields an extraction with zero blocks (md5 still
+    computed — M9 parity, cli/parse_pdfs.py:190-195). The one raise is a
+    content stream inflating past MAX_INFLATED_BYTES (ValueError), which
+    the extraction UDF turns into an error row.
     """
     md5sum = hashlib.md5(data).hexdigest()
     try:
@@ -325,9 +346,8 @@ def extract_pdf(data: bytes) -> PdfExtraction:
                 continue
             raw = sm.group(1)
             if b"/FlateDecode" in cobj:
-                try:
-                    raw = zlib.decompress(raw.rstrip(b"\r\n"))
-                except Exception:
+                raw = _inflate(raw.rstrip(b"\r\n"))
+                if raw is None:
                     continue
             try:
                 shows.extend(_parse_content_stream(raw.decode("latin-1")))

@@ -88,19 +88,19 @@ def collect_if_small(df, non_null=()):
     return pdf
 
 
-def materialize_concurrently(*thunks):
+def materialize_concurrently(spark, *thunks):
     """Run independent materialization thunks (each typically ending in
     an eager localCheckpoint) in parallel driver threads and return
     their results in argument order — guide §2.6: Spark actions are
     only sequential because driver code calls them sequentially.
-    Threads are wrapped with inheritable_thread_target so job
-    descriptions/tags propagate under pinned-thread mode."""
+    Threads are wrapped with inheritable_thread_target(spark) so the
+    caller's local properties and the session's job tags reach the jobs
+    each thunk runs (without the session, pyspark drops the tags)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(t)) for t in thunks
-        ]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futures]

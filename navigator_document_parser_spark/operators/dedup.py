@@ -947,7 +947,7 @@ def snapshot_dedup(
     )
 
     new_p, old_p = materialize_concurrently(
-        lambda: prep(new_df), lambda: prep(old_df)
+        new_df.sparkSession, lambda: prep(new_df), lambda: prep(old_df)
     )
     new_h = new_p.select("id", "h")
     old_h = old_p.select("h").dropDuplicates(["h"])
@@ -3011,6 +3011,7 @@ def phash_snapshot_dedup(
     )
 
     b_new, b_old = materialize_concurrently(
+        new_images.sparkSession,
         lambda: bands_of(new_images, "new"),
         lambda: bands_of(old_images, "old"),
     )

@@ -639,7 +639,9 @@ def index_merge(
         )
 
         old_index, delta = materialize_concurrently(
-            lambda: old_index.localCheckpoint(eager=True), _delta
+            new_docs.sparkSession,
+            lambda: old_index.localCheckpoint(eager=True),
+            _delta,
         )
     else:
         delta = _delta()

@@ -4,6 +4,8 @@ Spark lifecycle equivalent of cli/run_parser.py's imperative dataflow
 (SURVEY §3.1): the whole pipeline is one declarative plan — scan ->
 route column (P1) -> optional explicit repartition (skew) -> one
 ArrowEvalPython stage (extract_udf: M1-M12 + M8) -> column flatten.
+Without an explicit repartition, the UDF stage is sized by cores and
+bytes (size_udf_input), never by the input's file count.
 Catalyst prunes the blob column after the UDF; only the result struct
 survives downstream.
 """
@@ -65,8 +67,40 @@ def rebalance_for_skew(df: DataFrame, partitions: int) -> DataFrame:
     be split across tasks), i.e. max_partition <= mean + max_blob. Size
     ``partitions`` so mean partition bytes >> the largest expected blob
     and the bound is tight (tested in tests/test_skew.py).
+
+    Without this knob the UDF input is only coalesced (size_udf_input):
+    whole input partitions are grouped, never split, so a 100x blob
+    shares its core with the rest of its group's rows instead of being
+    spread. ``--rebalance-partitions`` stays the defusal for such inputs.
     """
     return df.repartition(partitions)
+
+
+def size_udf_input(df: DataFrame) -> DataFrame:
+    """Coalesce the input of a Python-UDF stage, without a shuffle, to
+    max(defaultParallelism, ceil(estimated plan bytes /
+    spark.sql.files.maxPartitionBytes)) partitions.
+
+    Each Python task pays a fixed start cost (about 0.1-0.5 s in
+    pyspark's per-task importlib.invalidate_caches(), which re-reads
+    pyspark.zip, whatever the row count), so a scan that yields one task
+    per input file multiplies that cost by the file count. One task per
+    core, or more when the input is large, amortises it. A frame whose
+    plan size Spark does not know (RDD-backed rows report
+    spark.sql.defaultSizeInBytes) keeps its partitioning.
+    """
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size >= conf.defaultSizeInBytes():
+        return df
+    n = max(
+        spark.sparkContext.defaultParallelism,
+        -(-size // conf.filesMaxPartitionBytes()),
+    )
+    # a join estimate can still be near 2^63; coalesce takes an int32
+    # and never raises the partition count anyway
+    return df.coalesce(min(n, 2**31 - 1))
 
 
 def run_extraction(
@@ -86,9 +120,11 @@ def run_extraction(
     into pipeline_metadata) — deliberately not per-row now():
     determinism requires the caller to pin it once per run.
     """
-    routed = with_route(docs)
     if rebalance_partitions:
-        routed = rebalance_for_skew(routed, rebalance_partitions)
+        docs = rebalance_for_skew(docs, rebalance_partitions)
+    else:
+        docs = size_udf_input(docs)
+    routed = with_route(docs)
 
     extracted = routed.withColumn(
         "x", extract_udf(F.col("html"), F.col("route"))
@@ -309,6 +345,7 @@ def run_translation(
             how="left_anti",
         )
 
+    exploded = size_udf_input(exploded)
     translate_blocks = make_translate_blocks_udf()
     translate_pdf_blocks = make_translate_pdf_blocks_udf()
     translated = exploded.withColumn(

@@ -1813,3 +1813,24 @@ def test_q6_filters_pushed_and_columns_pruned(spark):
     assert "l_shipdate" in scan and "l_discount" in scan
     cols = scan.split("FileScan parquet [")[1].split("]")[0].split(",")
     assert len(cols) == 4  # column pruning: 4 of 11
+
+
+def test_materialize_concurrently_inherits_job_tags(spark):
+    # a tag added on the calling thread reaches every thunk's thread,
+    # without pyspark's "Spark session is not provided" warning
+    import warnings
+
+    from navigator_document_parser_spark.operators import (
+        materialize_concurrently,
+    )
+
+    spark.addTag("ndps-concurrent")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", UserWarning)
+            tags = materialize_concurrently(
+                spark, spark.getTags, spark.getTags, spark.getTags
+            )
+    finally:
+        spark.removeTag("ndps-concurrent")
+    assert all("ndps-concurrent" in t for t in tags), tags

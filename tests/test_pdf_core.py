@@ -127,3 +127,30 @@ def test_no_table_on_plain_paragraph_page():
     pages = [[(72, 700 - 20 * j, 12, f"paragraph line {j}") for j in range(6)]]
     ext = extract_pdf(synthesize_pdf(pages))
     assert ext.tables == []
+
+
+def test_flate_bomb_becomes_error_row(monkeypatch):
+    # a stream inflating past the bound is an error row, not a worker
+    # OOM; the bound is patched down so a small stream plays the bomb
+    from navigator_document_parser_spark.extraction import pdf_blocks
+    from navigator_document_parser_spark.functions.udfs import _extract_one
+
+    pdf = _two_page_pdf(compress=True)
+    assert len(extract_pdf(pdf).blocks) > 0
+    monkeypatch.setattr(pdf_blocks, "MAX_INFLATED_BYTES", 16)
+    row = _extract_one(pdf, "pdf")
+    assert row["parser"] == "empty"
+    assert row["error"].startswith("pdf:flate stream inflates past 16 bytes")
+
+
+def test_corrupt_flate_stream_is_skipped():
+    # corrupt and truncated streams keep the page-level skip: no raise,
+    # no blocks from that stream
+    pdf = _two_page_pdf(compress=True)
+    start = pdf.index(b"stream\n", pdf.index(b"/FlateDecode")) + len(b"stream\n")
+    end = pdf.index(b"\nendstream", start)
+    truncated = pdf[:start] + pdf[start:end - 4] + pdf[end:]
+    garbled = pdf[:start] + b"\x00\x01" + pdf[start + 2:]
+    for bad in (truncated, garbled):
+        ext = extract_pdf(bad)
+        assert [b.page for b in ext.blocks] == [2, 2]
