@@ -1096,7 +1096,7 @@ def _domain_quality(spark, sf):
         .groupBy("src_host", "dst_host")
         .agg(F.count(F.lit(1)).alias("n_links"))
     )
-    ranks = pagerank(edges, iterations=5, checkpoint_every=3).select(
+    ranks = pagerank(edges, iterations=5).select(
         "node", F.round(F.col("rank"), 8).alias("rank")
     )
     quality = d.groupBy(F.col("source").alias("node")).agg(
@@ -1158,7 +1158,7 @@ def _pagerank_hosts(spark, sf):
         .groupBy("src_host", "dst_host")
         .agg(F.count(F.lit(1)).alias("n_links"))
     )
-    ranks = pagerank(edges, iterations=5, checkpoint_every=3)
+    ranks = pagerank(edges, iterations=5)
     return ranks.select("node", F.round(F.col("rank"), 8).alias("rank"))
 
 

@@ -12,9 +12,9 @@ Cluster usage (north-rule deployment shape):
         --translate en
 
 Reads the documents table (Iceberg path or parquet dir), resumes from
-whatever the sink has committed (anti-join), extracts, merges, writes
-lineage, then optionally appends stub-translated rows for the target
-languages.
+whatever the sink has committed (anti-join), extracts, merges (one row
+per key, picked by content), writes lineage, then optionally appends
+stub-translated rows for the target languages.
 """
 
 from __future__ import annotations
@@ -41,8 +41,6 @@ def main(argv=None):
                    help=">0 forces a round-robin repartition (skew defusal)")
     p.add_argument("--translate", default="",
                    help="comma-separated target languages; empty = skip")
-    p.add_argument("--assume-unique-keys", action="store_true",
-                   help="skip within-batch dedup (zero-shuffle path)")
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
@@ -74,10 +72,7 @@ def main(argv=None):
         rebalance_partitions=args.rebalance_partitions or None,
         parsing_date=args.parsing_date,
     )
-    stats = sink.merge(
-        spark, extracted, args.run_id,
-        assume_unique_keys=args.assume_unique_keys,
-    )
+    stats = sink.merge(spark, extracted, args.run_id)
     print(f"extraction merged: {stats}")
 
     targets = [t for t in args.translate.split(",") if t.strip()]

@@ -98,9 +98,7 @@ def extract_newsplease(html: str) -> HtmlExtraction:
     return _newsplease_from_root(parse_html(html))
 
 
-def extract_combined(
-    html: str, max_paragraph_words: int = HTML_MAX_PARAGRAPH_LENGTH_WORDS
-) -> HtmlExtraction:
+def extract_combined(html: str) -> HtmlExtraction:
     """M7 policy (src/html_parser/combined.py:53-79).
 
     The DOM is parsed ONCE and shared by both extractors — the reference
@@ -120,7 +118,7 @@ def extract_combined(
     longest_words = max(
         " ".join(b.text).count(" ") + 1 for b in np_result.text_blocks
     )
-    if longest_words > max_paragraph_words:
+    if longest_words > HTML_MAX_PARAGRAPH_LENGTH_WORDS:
         return _readability_from_root(root)
 
     return np_result

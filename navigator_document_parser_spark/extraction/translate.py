@@ -12,14 +12,13 @@ Parity targets:
 
 The default translator is the deterministic stub the reference's own tests
 mock in (src/translator/test/test_translate.py:12-16):
-``f"translated to {lang}: {text}"``. A real client is pluggable via the
-``translate_fn`` argument; it stays out of the hermetic path.
+``f"translated to {lang}: {text}"``. A real client replaces
+``stub_translate``; it stays out of the hermetic path.
 """
 
 from __future__ import annotations
 
 import string
-from typing import Callable
 
 
 def should_translate_text(text: str) -> bool:
@@ -53,15 +52,11 @@ def stub_translate(texts: list[str], target_language: str) -> list[str]:
     return [f"translated to {target_language}: {t}" for t in texts]
 
 
-def translate_texts(
-    texts: list[str],
-    target_language: str,
-    translate_fn: Callable[[list[str], str], list[str]] = stub_translate,
-) -> list[str]:
+def translate_texts(texts: list[str], target_language: str) -> list[str]:
     """M14 per-text-unit path: P8 skip, else translate.
 
     (translate.py:45-71 minus the network/retry, which belongs to the
-    pluggable translate_fn.)
+    real client that replaces stub_translate.)
     """
     out: list[str] = []
     pending: list[str] = []
@@ -72,7 +67,7 @@ def translate_texts(
             pending.append(t)
             pending_idx.append(i)
     if pending:
-        translated = translate_fn(pending, target_language)
+        translated = stub_translate(pending, target_language)
         for i, t in zip(pending_idx, translated):
             out[i] = t
     return out

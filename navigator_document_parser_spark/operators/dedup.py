@@ -131,7 +131,6 @@ def minhash_dedup_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.7,
-    persist: bool = True,
 ) -> DataFrame:
     """Full MinHash+LSH near-dup: candidates -> exact-Jaccard verify.
 
@@ -144,23 +143,20 @@ def minhash_dedup_pairs(
         band element after CollapseProject (~10x work)
       - the shingle table feeds THREE join branches (sig + verify a/b)
         and the exploded band table feeds TWO (self-join sides); without
-        persist Spark recomputes each branch from the scan. persist=True
-        (default) materializes both — shingles are ~2-3x text bytes,
-        MEMORY_AND_DISK spills safely at corpus scale. Disable only when
-        cache pressure costs more than recompute.
+        a checkpoint Spark recomputes each branch from the scan, so both
+        are eagerly checkpointed — shingles are ~2-3x text bytes, and
+        the blocks spill to disk safely at corpus scale.
     """
 
+    # barrier + reuse: three join branches read the materialized
+    # shingles; lineage truncation also stops InferFiltersFromGenerate
+    # pushdown from re-evaluating the shingle expression at the scan.
+    # EAGER: with a lazy checkpoint the branches race and can compute
+    # the table up to 3x concurrently before the cache fills
+    # (measured 2.6s vs 13s variance).
     sh = df.select(
         F.col(id_col).alias("id"), word_shingles(F.col(text_col)).alias("sh")
-    )
-    if persist:
-        # barrier + reuse: three join branches read the materialized
-        # shingles; lineage truncation also stops InferFiltersFromGenerate
-        # pushdown from re-evaluating the shingle expression at the scan.
-        # EAGER: with a lazy checkpoint the branches race and can compute
-        # the table up to 3x concurrently before the cache fills
-        # (measured 2.6s vs 13s variance).
-        sh = sh.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
 
     # Drop shingle-less docs (empty/short texts): they cannot be MinHash
     # near-dups, and leaving them in gives every one the SAME md5('')
@@ -184,9 +180,9 @@ def minhash_dedup_pairs(
             F.col("sh"), num_hashes, bands
         ).alias("band_keys"),
     )
-    exploded = sigs.select("id", F.posexplode("band_keys").alias("band", "key"))
-    if persist:
-        exploded = exploded.localCheckpoint(eager=True)
+    exploded = sigs.select(
+        "id", F.posexplode("band_keys").alias("band", "key")
+    ).localCheckpoint(eager=True)
     a = exploded.alias("a")
     b = exploded.alias("b")
     cands = (

@@ -14,9 +14,10 @@ dedup.connected_components:
     re-read every iteration and feeds two branches per round —
     CLAUDE.md lesson 7: lazy barriers race under concurrent branch
     materialization);
-  - rank lineage is truncated every ``checkpoint_every`` iterations so
+  - rank lineage is truncated every CHECKPOINT_EVERY iterations so
     the plan stays bounded (the components lesson: unbounded iterative
-    lineage re-executes the whole chain per action).
+    lineage re-executes the whole chain per action); label propagation,
+    BFS and k-core truncate theirs at the same cadence.
 
 Reference scope note: the reference parser has no graph analytics; this
 is part of the beyond-reference training-data layer (SURVEY §2 "beyond"
@@ -25,36 +26,31 @@ table), like dedup/ANN.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from navigator_document_parser_spark.operators import collect_if_small
 
+# Rounds between eager localCheckpoints of an iterative operator's state
+# (ranks, labels, depths, alive set). Read at call time.
+CHECKPOINT_EVERY = 3
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src_host",
-    dst: str = "dst_host",
-    weight: str | None = "n_links",
-    damping: float = 0.85,
-    iterations: int = 10,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """Weighted PageRank over an edge list -> (node, rank).
 
-    rank_{t+1}(v) = (1-d)/N + d * (sum_{u->v} rank_t(u) * w(u,v)/W(u)
-                                   + dangling_mass_t / N)
+def _truncate(df: DataFrame, i: int, rounds: int) -> DataFrame:
+    """Checkpoint the state after round ``i`` every CHECKPOINT_EVERY
+    rounds, except after the last. Eager: the state feeds two branches
+    of the next round (lesson 7)."""
+    if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < rounds:
+        return df.localCheckpoint(eager=True)
+    return df
 
-    where W(u) is u's total out-weight and dangling nodes (no
-    out-edges) redistribute their mass uniformly — the standard
-    stochastic-matrix completion, so sum(rank) == 1 at every step.
 
-    Scale: per iteration one shuffle on dst (hash aggregate with
-    map-side combine) plus one broadcast of the current ranks onto the
-    checkpointed edge table when ranks are small, or a hash join on src
-    when they are not — Spark's join planner picks via AQE; the
-    dangling aggregate is a 1-row reduction crossJoin-broadcast back.
-    """
+def _transition(
+    edges: DataFrame, src: str, dst: str, weight: str | None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(frac, nodes, dangling) of the weighted link graph, each eagerly
+    checkpointed: frac (src, dst, w/W(src)) and nodes are re-read every
+    iteration; dangling nodes (never a src) spread their mass."""
     w = (
         F.col(weight).cast("double")
         if weight is not None
@@ -75,17 +71,37 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    # static dangling set: nodes that never appear as src
     dangling = nodes.join(
         frac.select(F.col("src").alias("node")).distinct(),
         "node",
         "left_anti",
     ).localCheckpoint(eager=True)
+    return frac, nodes, dangling
 
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+
+def _power_iteration(
+    frac: DataFrame,
+    nodes: DataFrame,
+    dangling: DataFrame,
+    init: Column,
+    teleport: Column,
+    dangling_share: Column,
+    damping: float,
+    iterations: int,
+) -> DataFrame:
+    """The power iteration pagerank and trustrank share -> (node, rank):
+
+    rank_0(v)     = init
+    rank_{t+1}(v) = teleport + d * (in-flow(v) + dangling_share)
+
+    ``init``, ``teleport`` and ``dangling_share`` are columns over
+    ``node``; ``dangling_share`` may also read ``dm``, this round's
+    dangling mass. Per iteration one shuffle on dst (hash aggregate with
+    map-side combine) plus one join of the ranks onto the checkpointed
+    edge table (broadcast or hash, as AQE picks); the dangling mass is a
+    1-row reduction crossJoin-broadcast back.
+    """
+    ranks = nodes.select("node", init.alias("rank"))
     d = float(damping)
     for i in range(int(iterations)):
         dang_mass = (
@@ -99,24 +115,54 @@ def pagerank(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("rank") * F.col("frac")).alias("m"))
         )
-        ranks = (
+        ranks = _truncate(
             nodes.join(contrib, "node", "left")
             .crossJoin(F.broadcast(dang_mass))
             .select(
                 "node",
                 (
-                    F.lit((1.0 - d) / n)
+                    teleport
                     + F.lit(d)
-                    * (F.coalesce(F.col("m"), F.lit(0.0))
-                       + F.col("dm") / n)
+                    * (F.coalesce(F.col("m"), F.lit(0.0)) + dangling_share)
                 ).alias("rank"),
-            )
+            ),
+            i,
+            int(iterations),
         )
-        # bound the iterative lineage; eager: ranks feeds BOTH the
-        # dangling aggregate and the contribution join next round
-        if (i + 1) % int(checkpoint_every) == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks
+
+
+def pagerank(
+    edges: DataFrame,
+    src: str = "src_host",
+    dst: str = "dst_host",
+    weight: str | None = "n_links",
+    damping: float = 0.85,
+    iterations: int = 10,
+) -> DataFrame:
+    """Weighted PageRank over an edge list -> (node, rank).
+
+    rank_{t+1}(v) = (1-d)/N + d * (sum_{u->v} rank_t(u) * w(u,v)/W(u)
+                                   + dangling_mass_t / N)
+
+    where W(u) is u's total out-weight and dangling nodes (no
+    out-edges) redistribute their mass uniformly — the standard
+    stochastic-matrix completion, so sum(rank) == 1 at every step.
+    Scale shape: _power_iteration.
+    """
+    frac, nodes, dangling = _transition(edges, src, dst, weight)
+    n = nodes.count()
+    if n == 0:
+        return nodes.withColumn("rank", F.lit(0.0))
+    d = float(damping)
+    return _power_iteration(
+        frac, nodes, dangling,
+        init=F.lit(1.0 / n),
+        teleport=F.lit((1.0 - d) / n),
+        dangling_share=F.col("dm") / n,
+        damping=d,
+        iterations=iterations,
+    )
 
 
 def hits(
@@ -256,7 +302,6 @@ def label_propagation(
     iterations: int = 5,
     src: str = "src_host",
     dst: str = "dst_host",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Synchronous min-label propagation over the UNDIRECTED host graph
     — the cheap community detector crawl pipelines use to group hosts
@@ -272,7 +317,7 @@ def label_propagation(
 
     100 TB shape: per round ONE edge-join + min-aggregate (string min
     has a map-side partial combine); label lineage truncated every
-    ``checkpoint_every`` rounds like pagerank. Returns (node, community).
+    CHECKPOINT_EVERY rounds like pagerank. Returns (node, community).
     """
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -316,21 +361,17 @@ def label_propagation(
             .agg(F.min("label").alias("nbr_min"))
             .withColumnRenamed("a", "node")
         )
-        labels = (
+        labels = _truncate(
             labels.join(nbr, "node", "left")
             .select(
                 "node",
                 F.least(
                     F.col("label"), F.coalesce("nbr_min", F.col("label"))
                 ).alias("label"),
-            )
+            ),
+            i,
+            int(iterations),
         )
-        if (
-            checkpoint_every
-            and (i + 1) % int(checkpoint_every) == 0
-            and i + 1 < iterations
-        ):
-            labels = labels.localCheckpoint(eager=True)
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -372,7 +413,6 @@ def bfs_depth(
     rounds: int = 4,
     src: str = "src_host",
     dst: str = "dst_host",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Multi-source BFS over the DIRECTED link graph: crawl depth from
     a seed list — the frontier-discovery question every crawl planner
@@ -390,7 +430,7 @@ def bfs_depth(
     100 TB shape: per round ONE join (labels to edge sources) + ONE
     min-aggregate (map-side partial combine) — the textbook Pregel
     round expressed as DataFrame ops; label lineage truncated every
-    ``checkpoint_every`` rounds exactly like pagerank/label_propagation.
+    CHECKPOINT_EVERY rounds exactly like pagerank/label_propagation.
 
     Returns (host, depth).
     """
@@ -450,7 +490,7 @@ def bfs_depth(
             .agg(F.min(F.col("dist") + 1).alias("nbr_min"))
             .withColumnRenamed("b", "node")
         )
-        labels = (
+        labels = _truncate(
             labels.join(nbr, "node", "left")
             .select(
                 "node",
@@ -458,14 +498,10 @@ def bfs_depth(
                     F.col("dist"),
                     F.coalesce("nbr_min", F.col("dist")),
                 ).alias("dist"),
-            )
+            ),
+            i,
+            int(rounds),
         )
-        if (
-            checkpoint_every
-            and (i + 1) % int(checkpoint_every) == 0
-            and i + 1 < rounds
-        ):
-            labels = labels.localCheckpoint(eager=True)
     return (
         labels.filter(F.col("dist") < _UNREACHED)
         .select(
@@ -525,7 +561,6 @@ def k_core(
     rounds: int = 5,
     src: str = "src_host",
     dst: str = "dst_host",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Bounded k-core decomposition of the UNDIRECTED host graph:
     repeatedly peel nodes of degree < k. The k-core is the standard
@@ -547,7 +582,7 @@ def k_core(
     symmetric edge table against the (shrinking) alive set + ONE
     count aggregate with map-side combine — alive only ever shrinks,
     so round cost is monotone non-increasing; edge table checkpointed
-    once, alive lineage truncated every ``checkpoint_every`` rounds.
+    once, alive lineage truncated every CHECKPOINT_EVERY rounds.
 
     Returns (host, degree).
     """
@@ -609,17 +644,13 @@ def k_core(
         )
 
     for t in range(int(rounds)):
-        alive = (
+        alive = _truncate(
             _degrees(alive)
             .filter(F.col("deg") >= int(k))
-            .select(F.col("a").alias("node"))
+            .select(F.col("a").alias("node")),
+            t,
+            int(rounds),
         )
-        if (
-            checkpoint_every
-            and (t + 1) % int(checkpoint_every) == 0
-            and t + 1 < rounds
-        ):
-            alive = alive.localCheckpoint(eager=True)
     return _degrees(alive).select(
         F.col("a").alias("host"),
         F.col("deg").cast("bigint").alias("degree"),
@@ -848,7 +879,6 @@ def trustrank(
     weight: str | None = "n_links",
     damping: float = 0.85,
     iterations: int = 5,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """TrustRank (Gyongyi et al. 2004): PageRank with the teleport
     vector concentrated on a curated trusted-seed set — trust flows out
@@ -860,74 +890,27 @@ def trustrank(
     t as well — the standard personalized-PageRank completion, so
     sum(rank) == 1 every step). Initial rank = t.
 
-    Scale shape identical to pagerank(): one dst-keyed shuffle per
-    iteration, 1-row dangling broadcast, checkpoint every k rounds.
-    Seeds are a driver-side literal list (curated seed sets are
-    O(thousands)); for bigger seed tables swap the IN-set for a
-    broadcast semi-join flag.
+    Scale shape identical to pagerank() (_power_iteration). Seeds are a
+    driver-side literal list (curated seed sets are O(thousands)); for
+    bigger seed tables swap the IN-set for a broadcast semi-join flag.
     """
     if not seeds:
         raise ValueError("trustrank requires a non-empty seed set")
     seed_set = sorted(set(seeds))
     ns = len(seed_set)
-    w = (
-        F.col(weight).cast("double")
-        if weight is not None
-        else F.lit(1.0)
-    )
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
-    )
-    out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    frac = (
-        e.join(out_w, "src")
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("frac"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    dangling = nodes.join(
-        frac.select(F.col("src").alias("node")).distinct(),
-        "node",
-        "left_anti",
-    ).localCheckpoint(eager=True)
-
+    frac, nodes, dangling = _transition(edges, src, dst, weight)
     t_v = F.when(
         F.col("node").isin(seed_set), F.lit(1.0 / ns)
     ).otherwise(F.lit(0.0))
-    ranks = nodes.select("node", t_v.alias("rank"))
     d = float(damping)
-    for i in range(int(iterations)):
-        dang_mass = ranks.join(dangling, "node", "leftsemi").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        contrib = (
-            frac.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("frac")).alias("m"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dang_mass))
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - d) * t_v
-                    + F.lit(d)
-                    * (
-                        F.coalesce(F.col("m"), F.lit(0.0))
-                        + F.col("dm") * t_v
-                    )
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % int(checkpoint_every) == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    return _power_iteration(
+        frac, nodes, dangling,
+        init=t_v,
+        teleport=F.lit(1.0 - d) * t_v,
+        dangling_share=F.col("dm") * t_v,
+        damping=d,
+        iterations=iterations,
+    )
 
 
 def oracle_trustrank(

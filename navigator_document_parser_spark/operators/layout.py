@@ -63,7 +63,6 @@ def zorder_layout(
     id_col: str = "doc_id",
     bits: int = 16,
     n_buckets: int = 32,
-    repartition: bool = False,
 ) -> DataFrame:
     """Z-order curve position + range bucket for a two-dimensional
     layout key. Returns (id, za, zb, zvalue, bucket).
@@ -71,9 +70,8 @@ def zorder_layout(
     100 TB shape: one 1-row min/max aggregate per run (broadcast back
     via crossJoin), then a map-only projection computing the scaled
     coordinates and the interleaved curve position. A production writer
-    follows with repartitionByRange(n_buckets, zvalue) + write — pass
-    ``repartition=True`` to include that exchange here; the default
-    leaves the plan shuffle-free so the operator composes under other
+    follows with repartitionByRange(n_buckets, zvalue) + write; the plan
+    here stays shuffle-free so the operator composes under other
     layouts. Buckets are equal-width slices of the curve (bucket =
     zvalue * n_buckets div 2^(2*bits)); range-partitioning on zvalue at
     write time balances row counts even when the curve is occupied
@@ -105,7 +103,7 @@ def zorder_layout(
         F.expr(zb).cast("bigint").alias("zb"),
     )
     z = _interleave_sql("za", "zb", bits, "spark")
-    out = scaled.select(
+    return scaled.select(
         "id",
         "za",
         "zb",
@@ -116,9 +114,6 @@ def zorder_layout(
             "bigint"
         ),
     )
-    if repartition:
-        out = out.repartitionByRange(n_buckets, "zvalue")
-    return out
 
 
 def oracle_zorder_layout(

@@ -2,11 +2,10 @@
 
 Images/audio/video ride as `binary` columns with a typed metadata struct.
 The Spark-side plumbing — schema, Arrow batch shape, partitioning — is
-real and tested; the actual codec decode is STUBBED (this container has
-no image/audio libraries): `decode_media` raises NotImplementedError
-unless the deterministic fake decoder is selected, which derives features
-from the bytes alone (md5-chain), so the whole path is testable and
-byte-deterministic.
+real and tested; the codec decode is a deterministic stand-in
+(`fake_features`, an md5 chain over the bytes alone), so the whole path
+is testable and byte-deterministic. A real decoder (PIL/libsndfile/pyav)
+replaces `fake_features` and nothing around it.
 """
 
 from __future__ import annotations
@@ -44,19 +43,6 @@ FEATURE_SCHEMA = StructType([
 ])
 
 
-def decode_media(payload: bytes, kind: str):
-    """Real codec decode — NOT AVAILABLE in this container.
-
-    On a cluster with codec libs installed this is the single function to
-    replace (PIL/libsndfile/pyav); everything around it — batching,
-    schema, partitioning — is already production-shaped.
-    """
-    raise NotImplementedError(
-        "media codecs are not installed in this environment; "
-        "use fake_features (deterministic) or install codec libs"
-    )
-
-
 def fake_features(payload: bytes, dim: int = 8) -> list[float]:
     """Deterministic stand-in feature vector: md5-chained floats."""
     out = []
@@ -67,9 +53,7 @@ def fake_features(payload: bytes, dim: int = 8) -> list[float]:
     return out
 
 
-def extract_media_features(
-    media: DataFrame, dim: int = 8, use_fake_decoder: bool = True
-) -> DataFrame:
+def extract_media_features(media: DataFrame, dim: int = 8) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     Arrow batches stream payloads through Python once; output drops the
@@ -85,16 +69,12 @@ def extract_media_features(
                 pdf["media_id"], pdf["kind"], pdf["payload"]
             ):
                 payload = bytes(raw) if raw is not None else b""
-                if use_fake_decoder:
-                    feats = fake_features(payload, dim)
-                else:
-                    feats = decode_media(payload, kind)
                 rows.append({
                     "media_id": media_id,
                     "kind": kind,
                     "n_bytes": len(payload),
                     "content_hash": hashlib.md5(payload).hexdigest(),
-                    "features": feats,
+                    "features": fake_features(payload, dim),
                 })
             yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
 

@@ -66,11 +66,14 @@ def keyword_search(
     ``queries`` is an iterable of (query_id, terms). A document matches
     iff every distinct query term occurs in it; matches are ranked by
     the integer idf-weighted score described in the module docstring,
-    ties broken by ascending doc_id (fully deterministic).
+    ties broken by ascending doc_id (fully deterministic). A row with a
+    NULL doc_id is no document: it is dropped on input, as in
+    bm25_search.
 
     Returns (query_id, rank, doc_id, score, sum_tf).
     """
     spark = df.sparkSession
+    df = df.filter(F.col(id_col).isNotNull())
     qrows = []
     vocab: set[str] = set()
     for qid, terms in queries:
@@ -86,8 +89,8 @@ def keyword_search(
     # join; the barrier stops each branch from re-running
     # scan->explode->agg (lessons 3/7). Post-filter it is tiny:
     # |vocab| x n_docs rows at most. dfq is count(doc_id) over the
-    # unique (term, doc_id) rows == count(DISTINCT doc_id), NULL not
-    # counted, as a map-side-combinable aggregate + broadcast — NOT a
+    # unique (term, doc_id) rows == count(DISTINCT doc_id), as a
+    # map-side-combinable aggregate + broadcast — NOT a
     # term-partitioned window, which would serialize a hot term into
     # one task (r7 review).
     tf = term_postings(
@@ -134,7 +137,8 @@ def oracle_keyword_search(
     table: str = "documents",
     k: int = 10,
 ) -> str:
-    """DuckDB SQL computing exactly keyword_search() (integer math only)."""
+    """DuckDB SQL computing exactly keyword_search() (integer math
+    only); NULL-doc_id rows are dropped on input."""
     from navigator_document_parser_spark.operators import sql_quote
 
     vals = []
@@ -149,7 +153,7 @@ def oracle_keyword_search(
           SELECT {id_col} AS doc_id,
                  unnest(string_split_regex(
                    trim(lower({text_col})), '\\s+')) AS term
-          FROM {table}
+          FROM {table} WHERE {id_col} IS NOT NULL
         ), tf AS (
           SELECT term, doc_id, count(*) AS tf
           FROM w
@@ -160,6 +164,7 @@ def oracle_keyword_search(
           SELECT term, count(DISTINCT doc_id) AS dfq FROM tf GROUP BY term
         ), n AS (
           SELECT count(DISTINCT {id_col}) AS n_docs FROM {table}
+          WHERE {id_col} IS NOT NULL
         ), scored AS (
           SELECT q.query_id, tf.doc_id,
                  count(*) AS n_matched, max(q.n_terms) AS n_terms,
@@ -333,10 +338,14 @@ def bm25_search(
     here a second narrow aggregate branch) join in via broadcasts. The
     doc-length sum is kept in BIGINT and divided once, so avgdl is
     order-independent — a floating avg() over a shuffled corpus is not.
+    A row with a NULL doc_id is no document: it is dropped on input, so
+    it is neither scored nor counted in n_docs or avgdl (keyword_search
+    drops it the same way).
 
     Returns (query_id, rank, doc_id, score).
     """
     spark = df.sparkSession
+    df = df.filter(F.col(id_col).isNotNull())
     qrows = []
     vocab: set[str] = set()
     for qid, terms in queries:
@@ -358,12 +367,7 @@ def bm25_search(
     )
     tf = (
         base.select("doc_id", "dl", F.explode("toks").alias("term"))
-        # a NULL doc_id row counts toward n_docs and avgdl but is never
-        # scored: the oracle builds tf through a join on doc_id
-        .filter(
-            F.col("term").isin(sorted(vocab))
-            & F.col("doc_id").isNotNull()
-        )
+        .filter(F.col("term").isin(sorted(vocab)))
         .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
         # tf feeds the dfreq aggregate AND the scored join; without a
@@ -410,7 +414,8 @@ def oracle_bm25_search(
     b: float = 0.75,
 ) -> str:
     """DuckDB SQL computing exactly bm25_search() — same scoring SQL
-    fragment, same 4dp rounding before ranking."""
+    fragment, same 4dp rounding before ranking; NULL-doc_id rows are
+    dropped on input."""
     from navigator_document_parser_spark.operators import sql_quote
 
     vals = []
@@ -426,7 +431,7 @@ def oracle_bm25_search(
                  list_filter(string_split_regex(
                    trim(lower({text_col})), '\\s+'),
                    t -> length(t) > 0) AS toks
-          FROM {table}
+          FROM {table} WHERE {id_col} IS NOT NULL
         ), lens AS (
           SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM base
         ), stats AS (

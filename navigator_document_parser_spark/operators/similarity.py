@@ -20,6 +20,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Rows per chunk of an in-block numpy gram matmul: a chunk's similarity
+# matrix is chunk x block_size doubles. Read at call time; tests patch
+# them to force many partial chunks.
+NEARDUP_CHUNK_ROWS = 2048
+KNN_GRAPH_CHUNK_ROWS = 1024
+BITEXT_CHUNK_ROWS = 1024
+BITEXT_LSH_CHUNK_ROWS = 2048
+# Rows per side of one bitext_margin_mine hash block (task size).
+BITEXT_BLOCK_ROWS = 12288
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -580,7 +590,6 @@ def embedding_neardup_pairs(
     block_col: str | None = "label",
     dim: int | None = None,
     n_planes: int = 8,
-    chunk_rows: int = 2048,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, blocked to avoid N^2.
 
@@ -600,7 +609,7 @@ def embedding_neardup_pairs(
     gate stays Spark-side so the oracle comparison semantics are
     unchanged. The only shuffle is the groupBy on the block key.
 
-    Memory: chunking bounds the GRAM matrix at chunk_rows x block_size
+    Memory: chunking bounds the GRAM matrix at NEARDUP_CHUNK_ROWS x block_size
     doubles, but applyInPandas materializes each whole block (ids +
     vectors) in one task before chunking — per-task memory is
     O(block_size x dim). Blocking columns must therefore have bounded
@@ -624,7 +633,7 @@ def embedding_neardup_pairs(
         blk.alias("blk"),
     )
     lo = float(threshold) - 1e-4
-    chunk = int(chunk_rows)
+    chunk = NEARDUP_CHUNK_ROWS
 
     def block_pairs(pdf):
         import numpy as np
@@ -727,7 +736,6 @@ def knn_graph(
     n_tables: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    chunk_rows: int = 1024,
 ) -> DataFrame:
     """All-vectors top-k cosine neighbor graph — the offline kNN-graph
     build that semantic dedup, diversity sampling, and graph-based
@@ -772,7 +780,7 @@ def knn_graph(
         .withColumn("bkt", _bucket_case("v", dim, n_planes, n_tables))
     )
     kk = int(k)
-    chunk = int(chunk_rows)
+    chunk = KNN_GRAPH_CHUNK_ROWS
 
     def block_topk(pdf):
         import numpy as np
@@ -1323,7 +1331,7 @@ def oracle_knn_pq(
 
 # ---- margin-based bitext mining (CCMatrix / LASER alignment shape) ---------
 
-def _block_margin_fn(chunk_rows: int):
+def _block_margin_fn(chunk: int):
     """Cogrouped per-block margin scorer shared by bitext_margin_mine
     (hash-blocked exact) and bitext_margin_mine_lsh (LSH-blocked).
 
@@ -1332,8 +1340,8 @@ def _block_margin_fn(chunk_rows: int):
     raw in block) - 2e-4: a dropped candidate has rounded sim strictly
     below two emitted rivals' rounded sims (|round(x) - x| <= 5e-5
     each), so the pruned union provably contains the block's 4dp top-2
-    — a row-count optimization, never a semantics change."""
-    chunk = int(chunk_rows)
+    — a row-count optimization, never a semantics change. ``chunk``
+    source rows share one gram matmul."""
 
     def block_margin(left, right):
         import numpy as np
@@ -1381,8 +1389,6 @@ def bitext_margin_mine(
     min_margin: float = 0.02,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    block_rows: int = 12288,
-    chunk_rows: int = 1024,
 ) -> DataFrame:
     """Margin-based parallel-corpus mining: for every source-language
     vector, score the top-2 target-language neighbors by cosine and
@@ -1410,16 +1416,16 @@ def bitext_margin_mine(
     and the exact Spark-side round + window + margin tail below is
     unchanged — identical output, O(|src| x |tgt|) flops now at BLAS
     speed. At mining scale (10^9 x 10^9) still prefer the LSH path:
-    this baseline's flops are inherently quadratic; block_rows only
-    sizes tasks (per-task memory is O(block_rows x dim + chunk_rows x
-    block_rows)).
+    this baseline's flops are inherently quadratic; BITEXT_BLOCK_ROWS
+    only sizes tasks (per-task memory is O(BITEXT_BLOCK_ROWS x dim +
+    BITEXT_CHUNK_ROWS x BITEXT_BLOCK_ROWS)).
 
     Returns (src_id, tgt_id, sim, margin) for accepted pairs.
     """
     n_src = src.count()
     n_tgt = tgt.count()
-    s_blocks = max(1, -(-int(n_src) // int(block_rows)))
-    t_blocks = max(1, -(-int(n_tgt) // int(block_rows)))
+    s_blocks = max(1, -(-int(n_src) // BITEXT_BLOCK_ROWS))
+    t_blocks = max(1, -(-int(n_tgt) // BITEXT_BLOCK_ROWS))
     s_id_type = src.schema[id_col].dataType.simpleString()
     t_id_type = tgt.schema[id_col].dataType.simpleString()
     s_idx = (
@@ -1450,7 +1456,7 @@ def bitext_margin_mine(
         s_idx.groupBy("sb", "tb")
         .cogroup(t_idx.groupBy("sb", "tb"))
         .applyInPandas(
-            _block_margin_fn(chunk_rows),
+            _block_margin_fn(BITEXT_CHUNK_ROWS),
             schema=(
                 f"src_id {s_id_type}, tgt_id {t_id_type}, sim_raw double"
             ),
@@ -1527,7 +1533,6 @@ def bitext_margin_mine_lsh(
     n_tables: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    chunk_rows: int = 2048,
 ) -> DataFrame:
     """LSH-blocked margin mining — the scale path for
     ``bitext_margin_mine`` (which is the exact O(|src| x |tgt|)
@@ -1569,7 +1574,7 @@ def bitext_margin_mine_lsh(
     bit-for-bit in DuckDB.
 
     Per-task memory is O(block_size x dim) for the cogrouped block
-    (ids + both vector stacks) plus the chunk_rows x block_size GRAM
+    (ids + both vector stacks) plus the BITEXT_LSH_CHUNK_ROWS x block_size GRAM
     chunk — size n_planes so buckets stay bounded, exactly the
     embedding_neardup_pairs discipline.
 
@@ -1598,7 +1603,7 @@ def bitext_margin_mine_lsh(
         s_idx.groupBy("tbl", "bkt")
         .cogroup(t_idx.groupBy("tbl", "bkt"))
         .applyInPandas(
-            _block_margin_fn(chunk_rows),
+            _block_margin_fn(BITEXT_LSH_CHUNK_ROWS),
             schema=(
                 f"src_id {s_id_type}, tgt_id {t_id_type}, sim_raw double"
             ),

@@ -226,6 +226,12 @@ def oracle_winnow(k: int = 8, w: int = 4) -> str:
     """
 
 
+# Docs per winnow_pairs block: B = ceil(n / WINNOW_BLOCK_ROWS) blocks per
+# side, so n*B replicated rows against B*(B+1)/2 block-pair tasks. Read at
+# call time; tests patch it.
+WINNOW_BLOCK_ROWS = 2048
+
+
 def winnow_pairs(
     df: DataFrame,
     min_shared: int = 3,
@@ -233,7 +239,6 @@ def winnow_pairs(
     w: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    block_rows: int = 2048,
 ) -> DataFrame:
     """MOSS-style plagiarism pairs over winnowing fingerprints
     (Schleimer/Wilkerson/Aiken §4): documents sharing >= ``min_shared``
@@ -249,13 +254,13 @@ def winnow_pairs(
     fp self-join shuffles sum(df^2) ~ 19 BILLION pair rows through a
     JVM join + re-shuffled aggregate, 380s). Instead: docs fold to
     (id, fp-array) once, each doc's array is replicated to its
-    B = ceil(n/block_rows) block-pair tasks, and every task counts its
+    B = ceil(n/WINNOW_BLOCK_ROWS) block-pair tasks, and every task counts its
     block pair's intersections with a per-left-doc gather + bincount
     over a fp-sorted right-side inverted index — the (id_a, id_b)
     aggregation happens entirely in-task (both docs' full fp sets are
     present, so every pair's count is FINAL — nothing quadratic ever
     crosses the shuffle).
-    Replication ships n*B doc rows, so block_rows trades task count
+    Replication ships n*B doc rows, so WINNOW_BLOCK_ROWS trades task count
     against shuffle volume; the min_shared filter applies in-task,
     before emission.
 
@@ -268,7 +273,7 @@ def winnow_pairs(
         df, id_col=id_col, text_col=text_col, k=k, w=w
     ).localCheckpoint(eager=True)
     n_docs = sets.count()
-    n_blocks = max(1, -(-int(n_docs) // int(block_rows)))
+    n_blocks = max(1, -(-int(n_docs) // WINNOW_BLOCK_ROWS))
     min_sh = int(min_shared)
 
     rep = (
@@ -678,7 +683,6 @@ def decontaminate(
     text_col: str = "text",
     ngram: int = 3,
     threshold: int = 1,
-    persist: bool = True,
 ) -> DataFrame:
     """Flag corpus docs sharing >= ``threshold`` distinct word n-grams
     with ANY benchmark/holdout document (the standard training-data
@@ -698,9 +702,7 @@ def decontaminate(
     c_sh = corpus.select(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), ngram).alias("sh"),
-    )
-    if persist:
-        c_sh = c_sh.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     inv = c_sh.filter(F.size("sh") > 0).select(
         "id", F.explode("sh").alias("g")
     )

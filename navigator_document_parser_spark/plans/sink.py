@@ -25,16 +25,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
+from pyspark.sql.types import MapType
 
 KEYS = ["url", "warc_ts", "translated_to"]
 
 # Broadcasting the committed key set is right while it fits executor
-# memory (keys are ~100 B/row -> ~1 GB at the default cap). Past the cap
-# the hint is dropped and AQE picks a shuffle join — same semantics,
-# different physical plan. Per-session override:
-#   spark.conf.set("spark.docparse.sink.maxBroadcastKeys", n)
-MAX_BROADCAST_KEYS_CONF = "spark.docparse.sink.maxBroadcastKeys"
-DEFAULT_MAX_BROADCAST_KEYS = 10_000_000
+# memory (keys are ~100 B/row -> ~1 GB at this cap). Past the cap the
+# hint is dropped and AQE picks a shuffle join — same semantics,
+# different physical plan. Read at call time; tests patch it.
+MAX_BROADCAST_KEYS = 10_000_000
 
 
 class ParquetMergeSink:
@@ -85,12 +84,7 @@ class ParquetMergeSink:
         from file stats would include non-key columns). Past the cap the
         plain DataFrame is returned and AQE picks a shuffle-hash join.
         """
-        limit = int(
-            spark.conf.get(
-                MAX_BROADCAST_KEYS_CONF, str(DEFAULT_MAX_BROADCAST_KEYS)
-            )
-        )
-        if keys.count() <= limit:
+        if keys.count() <= MAX_BROADCAST_KEYS:
             return F.broadcast(keys)
         return keys
 
@@ -170,24 +164,46 @@ class ParquetMergeSink:
 
     # -- merge -------------------------------------------------------------
 
+    def _dedup_batch(self, batch: DataFrame) -> DataFrame:
+        """One row per key (reference: input id-set dedup,
+        run_parser.py:157), picked by content: the smallest row in
+        Spark's total order over the non-key columns, so the same rows
+        in any order or partitioning keep the same row. One aggregate
+        grouped on the keys themselves (GROUP BY treats NULLs as equal,
+        '' and NULL stay apart, as in the anti-join), so the dedup is
+        the same single exchange a dropDuplicates would be.
+
+        Maps have no order in Spark, so a map column (pipeline_metadata,
+        doc_meta) takes part as its JSON text and is parsed back after
+        the pick — an exact round trip for string-keyed maps.
+        """
+        rest = [f for f in batch.schema.fields if f.name not in self.keys]
+        has_map = {f.name for f in rest if isinstance(f.dataType, MapType)}
+        picked = batch.groupBy(*self.keys).agg(
+            F.min(
+                F.struct(*[
+                    F.to_json(f.name).alias(f.name)
+                    if f.name in has_map else F.col(f.name)
+                    for f in rest
+                ])
+            ).alias("_row")
+        )
+        return picked.select(*[
+            F.col(c) if c in self.keys
+            else F.from_json(f"_row.{c}", batch.schema[c].dataType).alias(c)
+            if c in has_map
+            else F.col(f"_row.{c}").alias(c)
+            for c in batch.columns
+        ])
+
     def merge(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        run_id: str,
-        assume_unique_keys: bool = False,
+        self, spark: SparkSession, batch: DataFrame, run_id: str
     ) -> dict:
         """Insert-if-absent on (url, warc_ts, translated_to).
 
         Returns {'inserted': n, 'partitions': p} counted from the
         committed files (no re-execution of the upstream plan). Raises
         ValueError, writing nothing, on a table in the flat layout.
-
-        ``assume_unique_keys=True`` skips the within-batch dedup. The
-        dedup is a full shuffle of the payload bytes — when the input
-        table's key is already unique (the normal Iceberg case), skipping
-        it makes the whole extract->merge pipeline ZERO-shuffle: scan ->
-        ArrowEvalPython -> broadcast anti-join -> write.
         """
         if self._has_flat_files(spark):
             # a per-merge directory next to flat part files breaks
@@ -197,28 +213,18 @@ class ParquetMergeSink:
                 f"{self.path} holds data files at its root (flat layout); "
                 "the sink only appends per-merge partition directories"
             )
-        if assume_unique_keys:
-            deduped = batch
-        else:
-            # within-batch dedup (reference: input id-set dedup,
-            # run_parser.py:157) — coalesce null key parts for equality
-            deduped = batch.withColumn(
-                "_k_translated_to",
-                F.coalesce(F.col("translated_to"), F.lit("")),
-            ).dropDuplicates(["url", "warc_ts", "_k_translated_to"]).drop(
-                "_k_translated_to"
-            )
+        deduped = self._dedup_batch(batch)
 
         committed = self.committed_keys(spark)
         if committed is not None:
             # NULL-SAFE key equality throughout (<=>), matching both the
             # iceberg_merge_sql ON clause and the within-batch dedup
-            # (dropDuplicates treats nulls as equal): a null key part must
+            # (GROUP BY treats nulls as equal): a null key part must
             # anti-join against its committed twin, or re-running would
             # re-insert it every time and break run-twice-adds-0-rows.
             # Broadcast only while the key set fits executor memory
-            # (spark.docparse.sink.maxBroadcastKeys) — past that AQE
-            # plans a shuffle join; the sink interface doesn't change.
+            # (MAX_BROADCAST_KEYS) — past that AQE plans a shuffle join;
+            # the sink interface doesn't change.
             deduped = self._anti_join_keys(
                 deduped,
                 self._maybe_broadcast(spark, committed),

@@ -33,7 +33,7 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     df = spark.createDataFrame(edges, ["src_host", "dst_host", "n_links"])
     got = {
         r.node: r.rank
-        for r in pagerank(df, iterations=10, checkpoint_every=3).collect()
+        for r in pagerank(df, iterations=10).collect()
     }
     want = _numpy_pagerank(edges, 5, 0.85, 10)
     assert set(got) == set(range(5))
@@ -54,3 +54,24 @@ def test_pagerank_star_graph_ordering_and_empty(spark):
 
     empty = df.filter("src_host < 0")
     assert pagerank(empty, iterations=3).count() == 0
+
+
+def test_trustrank_with_every_node_seeded_is_pagerank(spark):
+    """Both run one power iteration; seeding every node makes
+    trustrank's teleport and dangling share uniform, so the two agree
+    up to the rounding of (1-d)*(1/N) vs (1-d)/N."""
+    from navigator_document_parser_spark.operators.graph import trustrank
+
+    edges = [
+        (0, 1, 3.0), (0, 2, 1.0), (1, 2, 1.0), (2, 0, 1.0),
+        (3, 2, 2.0), (3, 4, 1.0), (1, 4, 1.0),
+    ]
+    df = spark.createDataFrame(edges, ["src_host", "dst_host", "n_links"])
+    pr = {r.node: r.rank for r in pagerank(df, iterations=10).collect()}
+    tr = {
+        r.node: r.rank
+        for r in trustrank(df, seeds=list(range(5)), iterations=10).collect()
+    }
+    assert set(pr) == set(tr) == set(range(5))
+    for v in pr:
+        assert tr[v] == pytest.approx(pr[v], abs=1e-12)

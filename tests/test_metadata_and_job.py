@@ -118,7 +118,6 @@ def test_extract_job_cli_end_to_end(spark):
             "--run-id", "job-1",
             "--parsing-date", "2026-08-16T00:00:00",
             "--translate", "en",
-            "--assume-unique-keys",
         ])
         out = spark.read.parquet(base + "/out")
         originals = out.filter(~F.col("translated")).count()

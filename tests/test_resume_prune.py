@@ -19,10 +19,8 @@ from navigator_document_parser_spark.plans.job import (
     run_extraction,
     run_translation,
 )
-from navigator_document_parser_spark.plans.sink import (
-    MAX_BROADCAST_KEYS_CONF,
-    ParquetMergeSink,
-)
+from navigator_document_parser_spark.plans import sink as sink_mod
+from navigator_document_parser_spark.plans.sink import ParquetMergeSink
 from navigator_document_parser_spark.sources.synth import synth_documents
 
 N_DOCS = 40
@@ -136,30 +134,77 @@ def test_translation_resume_prunes_before_udf(spark, out_dir):
     assert fr_rows > 0 and en_rows == 0
 
 
-def test_committed_keys_broadcast_fallback(spark, out_dir):
-    """Forcing the committed key set past maxBroadcastKeys drops the
+def test_committed_keys_broadcast_fallback(spark, out_dir, monkeypatch):
+    """Forcing the committed key set past MAX_BROADCAST_KEYS drops the
     broadcast hint (AQE shuffle join) — semantics unchanged: run-twice
     still adds 0 rows and resume still prunes compute."""
     docs = synth_documents(spark, 20, partitions=2)
     sink = ParquetMergeSink(out_dir)
     sink.merge(spark, run_extraction(docs, run_id="r1"), "r1")
 
-    spark.conf.set(MAX_BROADCAST_KEYS_CONF, "1")
-    try:
-        keys = sink.committed_extraction_keys(spark)
-        # the hint is genuinely absent from the logical plan
-        assert "ResolvedHint" not in keys._jdf.queryExecution().analyzed().toString()
+    monkeypatch.setattr(sink_mod, "MAX_BROADCAST_KEYS", 1)
+    keys = sink.committed_extraction_keys(spark)
+    # the hint is genuinely absent from the logical plan
+    assert "ResolvedHint" not in keys._jdf.queryExecution().analyzed().toString()
 
-        pruned = sink.prune_extraction_input(spark, docs)
-        assert pruned.count() == 0
+    pruned = sink.prune_extraction_input(spark, docs)
+    assert pruned.count() == 0
 
-        r2 = sink.merge(spark, run_extraction(docs, run_id="r2"), "r2")
-        assert r2["inserted"] == 0
-        assert spark.read.parquet(out_dir).count() == 20
+    r2 = sink.merge(spark, run_extraction(docs, run_id="r2"), "r2")
+    assert r2["inserted"] == 0
+    assert spark.read.parquet(out_dir).count() == 20
 
-        # and the small-key path DOES hint
-        spark.conf.set(MAX_BROADCAST_KEYS_CONF, "1000000")
-        keys2 = sink.committed_extraction_keys(spark)
-        assert "ResolvedHint" in keys2._jdf.queryExecution().analyzed().toString()
-    finally:
-        spark.conf.unset(MAX_BROADCAST_KEYS_CONF)
+    # and the small-key path DOES hint
+    monkeypatch.setattr(sink_mod, "MAX_BROADCAST_KEYS", 1_000_000)
+    keys2 = sink.committed_extraction_keys(spark)
+    assert "ResolvedHint" in keys2._jdf.queryExecution().analyzed().toString()
+
+
+def test_within_batch_dedup_picks_the_same_row_in_any_order(spark, out_dir):
+    """Rows that share a key but differ in content collapse to ONE row
+    chosen by their content, not by which row the aggregate saw first:
+    the same rows in any order or partitioning commit the same row.
+    '' and NULL in translated_to are two keys, as in the null-safe
+    anti-join and iceberg_merge_sql."""
+    import datetime
+
+    ts = datetime.datetime(2024, 1, 1)
+    schema = (
+        "url string, warc_ts timestamp, translated_to string, text string, "
+        "error string, pipeline_metadata map<string, map<string, string>>"
+    )
+    rows = [
+        ("u1", ts, None, "A", None, {"parser_metadata": {"run_id": "a"}}),
+        ("u1", ts, None, "B", None, {"parser_metadata": {"run_id": "b"}}),
+        ("u1", ts, None, "A", None, {"parser_metadata": {"run_id": "c"}}),
+        ("u2", ts, "fr", "y", None, None),
+        ("u2", ts, "fr", "x", "boom", None),
+        ("u3", ts, "", "p", None, {}),
+        ("u3", ts, None, "q", None, None),
+    ]
+
+    def committed(batch_rows, parts):
+        batch = spark.createDataFrame(batch_rows, schema)
+        batch = batch.coalesce(1) if parts == 1 else batch.repartition(parts)
+        path = f"{out_dir}/{len(seen)}"
+        stats = ParquetMergeSink(path).merge(spark, batch, "d")
+        assert stats["inserted"] == 4
+        return sorted(
+            (r["url"],
+             "<null>" if r["translated_to"] is None else r["translated_to"],
+             r["text"],
+             r["error"] or "", str(r["pipeline_metadata"]))
+            for r in spark.read.parquet(path).collect()
+        )
+
+    seen = []
+    for batch_rows in (rows, rows[::-1]):
+        for parts in (1, 3):
+            seen.append(committed(batch_rows, parts))
+    assert all(s == seen[0] for s in seen), seen
+    assert seen[0] == [
+        ("u1", "<null>", "A", "", "{'parser_metadata': {'run_id': 'a'}}"),
+        ("u2", "fr", "x", "boom", "None"),
+        ("u3", "", "p", "", "{}"),
+        ("u3", "<null>", "q", "", "None"),
+    ]

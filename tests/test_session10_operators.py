@@ -180,14 +180,16 @@ def test_knn_graph_prefix_consistent_across_k(graph_corpus):
     assert k2 == {key: v for key, v in k5.items() if key[1] <= 2}
 
 
-def test_knn_graph_chunked_matmul_invariant(graph_corpus):
-    """chunk_rows=7 (forces many partial gram blocks) == default."""
+def test_knn_graph_chunked_matmul_invariant(graph_corpus, monkeypatch):
+    """7-row chunks (forces many partial gram blocks) == default."""
+    from navigator_document_parser_spark.operators import similarity
+
     dim, emb = graph_corpus
     a = sorted((r.src_id, r.rank, r.nbr_id, r.sim) for r in knn_graph(
         emb, dim=dim, k=3, n_planes=3, n_tables=4).collect())
+    monkeypatch.setattr(similarity, "KNN_GRAPH_CHUNK_ROWS", 7)
     b = sorted((r.src_id, r.rank, r.nbr_id, r.sim) for r in knn_graph(
-        emb, dim=dim, k=3, n_planes=3, n_tables=4,
-        chunk_rows=7).collect())
+        emb, dim=dim, k=3, n_planes=3, n_tables=4).collect())
     assert a == b
 
 

@@ -851,9 +851,9 @@ def test_winnow_pairs_short_texts_yield_nothing(spark):
     assert winnow_pairs(df, min_shared=1).count() == 0
 
 
-def test_winnow_pairs_block_partitioning_invariant(spark):
+def test_winnow_pairs_block_partitioning_invariant(spark, monkeypatch):
     """r7 optimization pin: the blocked in-task pair counting must be
-    independent of block_rows — forcing every doc into its own block
+    independent of WINNOW_BLOCK_ROWS — forcing every doc into its own block
     (all pairs cross-block) gives the same pairs as one giant block."""
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = [
@@ -862,12 +862,13 @@ def test_winnow_pairs_block_partitioning_invariant(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
 
+    from navigator_document_parser_spark.operators import text
+
     def snap(block_rows):
+        monkeypatch.setattr(text, "WINNOW_BLOCK_ROWS", block_rows)
         return sorted(
             (r.id_a, r.id_b, r.n_shared, r.containment4)
-            for r in winnow_pairs(
-                df, min_shared=2, block_rows=block_rows
-            ).collect()
+            for r in winnow_pairs(df, min_shared=2).collect()
         )
 
     one_block = snap(1024)

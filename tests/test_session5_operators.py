@@ -213,7 +213,7 @@ def test_bitext_margin_accepts_clear_pairs_only(spark):
     assert out[100][1] > 0.9
 
 
-def test_bitext_margin_block_partitioning_invariant(spark):
+def test_bitext_margin_block_partitioning_invariant(spark, monkeypatch):
     """r7 optimization pin: scoring now runs per hash-block pair with
     an in-block top-2 containment guard — forcing 1-row blocks (every
     pair crosses blocks, every block emits its whole sub-matrix) must
@@ -231,12 +231,14 @@ def test_bitext_margin_block_partitioning_invariant(spark):
         ["vec_id", "embedding"],
     )
 
+    from navigator_document_parser_spark.operators import similarity
+
     def snap(block_rows):
+        monkeypatch.setattr(similarity, "BITEXT_BLOCK_ROWS", block_rows)
         return sorted(
             (r.src_id, r.tgt_id, r.sim, r.margin)
             for r in bitext_margin_mine(
                 src, tgt, min_sim=0.3, min_margin=0.01,
-                block_rows=block_rows,
             ).collect()
         )
 

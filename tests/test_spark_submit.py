@@ -49,7 +49,6 @@ def test_real_spark_submit_py_files(spark):
                 "--output", base + "/out",
                 "--run-id", "ssub-1",
                 "--master", "local[2]",
-                "--assume-unique-keys",
             ],
             # neutral cwd: driver-side imports resolve via the job file's
             # own repo-relative path insert (standard entry-file pattern);
